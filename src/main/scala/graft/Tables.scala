@@ -13,10 +13,6 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * possible so Catalyst pushes both into the scan.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Physical-type-agnostic table access: `events.ts` is normalized to one
     * stable engine-facing type (bigint UTC epoch nanos, see [[withTsNanos]])
     * so every consumer sees the same column regardless of which testdata
@@ -61,10 +57,6 @@ object Tables {
         s"events.ts has unsupported physical type $other — expected " +
           "timestamp[ns] (bigint under nanosAsLong) or timestamp[us/ltz]")
   }
-
-  /** Register every table as a temp view so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 
   /** SCALE-ADAPTIVE scan fan-out for heavy per-row pipelines (optimization
     * guide §2: make partitioning adapt to input size, not a constant tuned

@@ -2,6 +2,7 @@ package graft.sync
 
 import graft.config.{CheckType, TableConfig}
 import graft.operators.{Coerce, Incremental, Merge, Projection, Watermark}
+import graft.sources.Introspect
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions.{col, count, lit}
 
@@ -87,7 +88,7 @@ object SyncJob {
 
     // O9: relational upsert against current destination contents;
     // O3 fallback: no PK list -> all columns as the conflict key
-    val pks = if (primaryKeys.nonEmpty) primaryKeys else coerced.columns.toSeq
+    val pks = Introspect.conflictKey(primaryKeys, coerced.columns.toSeq)
     val merged: DataFrame = destDf match {
       case Some(d) =>
         val base = Projection.ignoring(d, cfg.ignoreColumns.toSet)

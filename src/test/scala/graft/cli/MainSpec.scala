@@ -1838,4 +1838,89 @@ class MainSpec extends SparkSpec {
     // the 8-row topic capped to its 4 LOWEST ids; the 3-row topic whole
     assert(byCluster.values.toSet === Set(Seq(0L, 1L, 2L, 3L), Seq(10L, 11L, 12L)))
   }
+
+  // ---------------------------------------------------------- CLI contract
+  // parse/usage are reached directly: none of these tests builds or uses a
+  // SparkSession, which is the point — a usage error exits 2 before Spark
+
+  private lazy val goldenUsage: String =
+    scala.util.Using.resource(scala.io.Source.fromResource("graft/cli/usage.txt"))(_.mkString)
+
+  private def commandNames: Seq[String] =
+    goldenUsage.linesIterator.map(_.stripPrefix("usage:").trim.takeWhile(_ != ' ')).toSeq
+
+  private def parseError(args: String*): Option[String] = Main.parse(args.toList).left.toOption
+
+  test("CLI contract: usage text equals the golden copy byte for byte") {
+    assert(Main.usage + "\n" === goldenUsage)
+  }
+
+  test("CLI contract: every command given no options is a usage error") {
+    assert(commandNames.length === 108)
+    assert(commandNames.distinct === commandNames)
+    commandNames.foreach(name => assert(Main.parse(List(name)).isLeft, name))
+  }
+
+  test("CLI contract: one exact message per validator kind") {
+    val knn = Seq("serve-knn", "--queries", "/q", "--corpus", "/c", "--id", "i", "--vec", "v")
+    assert(parseError(knn: _*) === Some("serve-knn: missing --k"))
+    assert(parseError(knn ++ Seq("--k", "0"): _*) ===
+      Some("serve-knn: --k must be a positive int, got 0"))
+    assert(parseError("index-ingest", "--source", "/s", "--corpus", "/c", "--id", "i",
+      "--vec", "v", "--centroids", "x") ===
+      Some("index-ingest: --centroids must be a positive int, got x"))
+    assert(parseError("compact", "--dir", "/x", "--target-mb", "0") ===
+      Some("compact: --target-mb must be a positive int, got 0"))
+    assert(parseError("asof", "--history", "/h", "--version", "0") ===
+      Some("asof: --version must be a positive long, got 0"))
+    assert(parseError("topk-report", "--counts", "/c", "--group", ",") ===
+      Some("topk-report: --group must name at least one column"))
+    assert(parseError("pack-windows", "--corpus", "/c", "--group", "g", "--order", "o",
+      "--text", "t", "--window", "4", "--bucket-width", "-1") ===
+      Some("pack-windows: --bucket-width must be a non-negative int, got -1"))
+    assert(parseError("line-dedup", "--corpus", "/c", "--id", "i", "--text", "t",
+      "--out", "/o", "--broadcast", "yes") ===
+      Some("line-dedup: --broadcast must be true or false, got yes"))
+    assert(parseError("profile", "--corpus", "/c", "--out", "/o", "--approx", "1") ===
+      Some("profile: --approx must be true or false, got 1"))
+    assert(parseError("bpe-train", "--corpus", "/c", "--text", "t", "--merges", "5",
+      "--byte-level", "y") === Some("bpe-train: --byte-level must be true or false, got y"))
+    assert(parseError("media-neardup", "--corpus", "/c", "--modality", "text") ===
+      Some("media-neardup: --modality must be image, audio or video, got text"))
+    assert(parseError("compact", "--dir") === Some("malformed option pair: --dir"))
+    assert(parseError("compact", "--dir", "/x", "extra") === Some("malformed option pair: extra"))
+    assert(parseError("file-sync", "/a") === Some("file-sync: expected <srcDir> <dstDir> [--apply]"))
+    assert(parseError("file-sync", "/a", "/b", "--force") ===
+      Some("file-sync: expected <srcDir> <dstDir> [--apply]"))
+    assert(parseError("bogus") === Some("unknown command: bogus"))
+    assert(parseError() === Some("unknown command: (none)"))
+    assert(Main.parse(List("compact", "--dir", "/x")).isRight)
+    assert(Main.parse(List("file-sync", "/a", "/b", "--apply")).isRight)
+  }
+
+  test("CLI contract: a flag the synopsis does not name is a usage error") {
+    assert(parseError("compact", "--dir", "/x", "--target-mbb", "64") ===
+      Some("compact: unknown option --target-mbb"))
+    assert(parseError("line-dedup", "--corpus", "/c", "--id", "i", "--text", "t",
+      "--out", "/o", "--broadcst", "false") === Some("line-dedup: unknown option --broadcst"))
+    assert(parseError("overlap-gate", "--source", "/s", "--index", "/i", "--id", "i",
+      "--text", "t", "--dest", "/d", "--table", "t", "--checkpoint", "/k",
+      "--max-df", "5", "--tombstone", "true") ===
+      Some("overlap-gate: unknown option --tombstone"))
+    // winnow's synopsis does not name winnow-overlap's --min-shared
+    assert(parseError("winnow", "--corpus", "/c", "--id", "i", "--text", "t",
+      "--out", "/o", "--min-shared", "2") === Some("winnow: unknown option --min-shared"))
+    assert(Main.run(spark, Array("compact", "--dir", "/x", "--target-mbb", "64")) === 2)
+  }
+
+  test("CLI contract: every graft.cli.Main example in README.md parses") {
+    val readme = Files.readString(java.nio.file.Paths.get("README.md"))
+    val examples = readme.replace("\\\n", " ").linesIterator.map(_.trim)
+      .filter(_.startsWith("graft.cli.Main ")).toSeq
+    assert(examples.length >= 30)
+    examples.foreach { ex =>
+      val parsed = Main.parse(ex.split("\\s+").toList.tail)
+      assert(parsed.isRight, s"$ex -> ${parsed.left.getOrElse("")}")
+    }
+  }
 }
