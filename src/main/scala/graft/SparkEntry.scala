@@ -7,7 +7,9 @@ import graft.operators._
 import graft.similarity.Similarity
 import graft.streaming.IncrementalStream
 import graft.text.{Classifier, NgramStats, Scrub, TextAnalysis, Unigram, WordPiece}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -738,8 +740,6 @@ object SparkEntry {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Remove a temp directory created for a streaming source once the
-    * query has terminated (every file is fully read by then). */
   private def deleteRecursively(dir: String): Unit = {
     val p = java.nio.file.Paths.get(dir)
     if (java.nio.file.Files.exists(p)) {
@@ -748,6 +748,44 @@ object SparkEntry {
         .forEach(q => java.nio.file.Files.deleteIfExists(q))
       finally walk.close()
     }
+  }
+
+  /** Run `body` against a fresh temp directory named after `prefix`,
+    * materialize its result, and delete the directory whether or not the
+    * body succeeds. The result is pinned with `localCheckpoint` so the
+    * returned plan never reads the deleted files; a result that is already
+    * materialized (a drained memory sink, or a checkpoint the body pinned
+    * so it could release what fed it) is returned as it is. */
+  private[graft] def scratch(prefix: String)(body: String => DataFrame): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    try {
+      val out = body(tmp)
+      out.queryExecution.analyzed match {
+        case _: LocalRelation => out
+        case l: LogicalRDD if l.rdd.isCheckpointed => out
+        case _ => out.localCheckpoint()
+      }
+    } finally deleteRecursively(tmp)
+  }
+
+  /** Append `rows` under `path`, one parquet file per partition, and
+    * stream every file there back one per micro-batch: `rows` split n
+    * ways drains as n batches. The caller keeps its split (`repartition`
+    * or `coalesce`); a second call on the same path adds files for a
+    * restarted query to pick up. */
+  private[graft] def fileStream(s: SparkSession, path: String, rows: DataFrame): DataFrame = {
+    rows.write.mode("append").parquet(path)
+    s.readStream.schema(rows.schema).option("maxFilesPerTrigger", "1").parquet(s"$path/*.parquet")
+  }
+
+  /** Run `df` to completion on a fresh memory sink (`mode` output,
+    * AvailableNow) and return `read` of the sink table, drained. */
+  private[graft] def memorySink(s: SparkSession, df: Dataset[_], mode: String = "append")(
+      read: DataFrame => DataFrame): DataFrame = {
+    val sink = s"sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    df.writeStream.format("memory").queryName(sink).outputMode(mode)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    drainSink(s, sink, read(s.table(sink)))
   }
 
   /** Flagship: the COMPLETE per-table sync pipeline (O11) on sf0.001 —
@@ -772,12 +810,13 @@ object SparkEntry {
       override def read(table: String) = Some(t(spark, dir, table))
       override def write(df: DataFrame, table: String) = sys.error("read-only")
     }
-    val dest = new ParquetStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_entry").toString)
-    dest.write(t(spark, dir, "orders").filter(col("o_orderkey") <= 1000), "orders")
-    val stats = SyncJob.run(source, dest, catalog("orders"), primaryKeys = Seq("o_orderkey"))
-    require(stats.mode.startsWith("incremental"), s"expected incremental branch, got ${stats.mode}")
-    dest.read("orders").get
+    scratch("graft_entry") { tmp =>
+      val dest = new ParquetStore(spark, tmp)
+      dest.write(t(spark, dir, "orders").filter(col("o_orderkey") <= 1000), "orders")
+      val stats = SyncJob.run(source, dest, catalog("orders"), primaryKeys = Seq("o_orderkey"))
+      require(stats.mode.startsWith("incremental"), s"expected incremental branch, got ${stats.mode}")
+      dest.read("orders").get
+    }
   }
 
   // ---------------------------------------------------------------- Q1-Q15
@@ -1456,11 +1495,7 @@ object SparkEntry {
         .withColumn("__ts", timestamp_micros(expr("ts div 1000")))
       val counts = IncrementalStream.windowedCounts(
         stream, "__ts", "event_type", "1 hour", "10 minutes")
-      val sink = s"q54_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = counts.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drainSink(s, sink, s.table(sink)
+      memorySink(s, counts, "complete")(_
         .select(unix_micros(col("window_start")).as("w_us"), col("event_type"), col("n"))
         .orderBy("w_us", "event_type"))
     }),
@@ -1483,11 +1518,7 @@ object SparkEntry {
         .withColumn("__ts", timestamp_micros(expr("ts div 1000")))
       val deduped = IncrementalStream.streamingDedup(stream, "__ts", Seq("user_id"), "10 minutes")
         .select(col("user_id"))
-      val sink = s"q61_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = deduped.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drainSink(s, sink, s.table(sink).orderBy("user_id"))
+      memorySink(s, deduped)(_.orderBy("user_id"))
     }),
 
     // product-quantization recall invariant: 64-dim float vectors
@@ -1737,30 +1768,25 @@ object SparkEntry {
       import s.implicits._
       val ev = t(s, dir, "events").select(col("user_id"), col("event_id"), col("ts"))
       val maxTs = ev.agg(max(col("ts"))).head.getLong(0)
-      val srcDir = java.nio.file.Files.createTempDirectory("q73src").toString
-      ev.coalesce(1).write.mode("append").parquet(srcDir)
-      ev.select(col("user_id")).distinct()
-        .select(col("user_id"), lit(-1L).as("event_id"),
-          lit(maxTs + 7200L * 1000 * 1000 * 1000).as("ts"))
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      val stream = s.readStream.schema(ev.schema).parquet(s"$srcDir/*.parquet")
-        .select(col("user_id"), col("event_id"),
-          timestamp_micros(expr("ts div 1000")).as("ts"))
-        .as[IncrementalStream.SessionEvent]
-      val sessions = IncrementalStream.sessionizeStream(
-        stream, gapUs = 1800L * 1000 * 1000, watermarkDelay = "10 minutes")
-      val sink = s"q73_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = sessions.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val out = drainSink(s, sink, s.table(sink)
-        .filter(col("session_start") <= maxTs / 1000)
-        .groupBy("user_id")
-        .agg(sum(col("n_events")).cast(LongType).as("n_events"),
-          count(lit(1)).cast(LongType).as("n_sessions"))
-        .orderBy("user_id"))
-      deleteRecursively(srcDir)
-      out
+      scratch("q73") { srcDir =>
+        ev.coalesce(1).write.mode("append").parquet(srcDir)
+        ev.select(col("user_id")).distinct()
+          .select(col("user_id"), lit(-1L).as("event_id"),
+            lit(maxTs + 7200L * 1000 * 1000 * 1000).as("ts"))
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        val stream = s.readStream.schema(ev.schema).parquet(s"$srcDir/*.parquet")
+          .select(col("user_id"), col("event_id"),
+            timestamp_micros(expr("ts div 1000")).as("ts"))
+          .as[IncrementalStream.SessionEvent]
+        val sessions = IncrementalStream.sessionizeStream(
+          stream, gapUs = 1800L * 1000 * 1000, watermarkDelay = "10 minutes")
+        memorySink(s, sessions)(_
+          .filter(col("session_start") <= maxTs / 1000)
+          .groupBy("user_id")
+          .agg(sum(col("n_events")).cast(LongType).as("n_events"),
+            count(lit(1)).cast(LongType).as("n_sessions"))
+          .orderBy("user_id"))
+      }
     }),
 
     // anti-entropy checksum invariant: the table fingerprint must be
@@ -1824,11 +1850,7 @@ object SparkEntry {
           timestamp_micros(expr("ts div 1000")).as("__ts"))
       val pairs = IncrementalStream.streamPairsWithin(
         stream, "user_id", "event_id", "__ts", "INTERVAL 1 HOUR", "2 hours")
-      val sink = s"q77_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = pairs.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drainSink(s, sink, s.table(sink)
+      memorySink(s, pairs)(_
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy("user_id"))
@@ -2218,8 +2240,7 @@ object SparkEntry {
       import graft.sync.{ParquetStore, SyncJob}
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"),
         col("n_chars").cast(LongType).as("n_chars"), col("source"))
-      val tmp = java.nio.file.Files.createTempDirectory("q116").toString
-      try {
+      scratch("q116") { tmp =>
         val src = new ParquetStore(s, s"$tmp/src")
         val dst = new ParquetStore(s, s"$tmp/dst")
         val cfg = TableConfig("docs", Some("doc_id"), Some(CheckType.Id), Seq.empty)
@@ -2242,7 +2263,7 @@ object SparkEntry {
           (if (strictRefused) 0L else 1L) +
           (if (out.columns.toSeq == Seq("doc_id", "n_chars", "src_tag")) 0L else 1L)
         s.range(1).select(lit(v).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // batch PQ/ADC retrieval graded two ways: (a) at a keep-everything
@@ -2323,20 +2344,13 @@ object SparkEntry {
     "q119_stream_decontaminate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val arrivals = docs.filter(col("doc_id") >= 250)
-      val srcDir = java.nio.file.Files.createTempDirectory("q119src").toString
-      try {
-        arrivals.repartition(2).write.mode("append").parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+      scratch("q119") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", arrivals.repartition(2))
         val flagged = Decontaminate.contaminatedIdsStream(
           stream, docs.filter(col("doc_id") < 250), "doc_id", "text",
           eventTimeCol = timestamp_micros(lit(86400000000L)), n = 13)
-        val sink = s"q119_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val q = flagged.writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, sink, s.table(sink).orderBy("doc_id"))
-      } finally deleteRecursively(srcDir)
+        memorySink(s, flagged)(_.orderBy("doc_id"))
+      }
     }),
 
     // STREAMING ingest near-dup gate through a PERSISTED index: the corpus
@@ -2360,32 +2374,24 @@ object SparkEntry {
       // is result-neutral
       val docs = tw(s, dir, "documents")
       val arrivals = docs.filter(col("doc_id") >= 250)
-      val srcDir = java.nio.file.Files.createTempDirectory("q121src").toString
-      val idxDir = java.nio.file.Files.createTempDirectory("q121idx").toString
-      try {
-        arrivals.repartition(2).write.mode("append").parquet(srcDir)
+      scratch("q121") { tmp =>
         val built = Dedup.buildNearDupIndex(docs.filter(col("doc_id") < 250),
           "doc_id", "text", c => Dedup.hashedShingles(TextAnalysis.tokenSet(c)),
           numHashes = 125, bands = 25)
-        val idxStore = new graft.sync.ParquetStore(s, idxDir)
+        val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         idxStore.write(built.bandIndex, "band_index")
         idxStore.write(built.shingleSets, "shingle_sets")
         val index = Dedup.NearDupIndex(
           idxStore.read("band_index").get, idxStore.read("shingle_sets").get)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", arrivals.repartition(2))
         val dups = Dedup.duplicateIdsStream(
           stream, index, "doc_id", "text",
           c => Dedup.hashedShingles(TextAnalysis.tokenSet(c)),
           num = 9, den = 10, numHashes = 125, bands = 25,
           eventTimeCol = timestamp_micros(lit(86400000000L)),
           watermarkDelay = "10 minutes")
-        val sink = s"q121_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val q = dups.writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, sink, s.table(sink).orderBy("doc_id"))
-      } finally { deleteRecursively(srcDir); deleteRecursively(idxDir) }
+        memorySink(s, dups)(_.orderBy("doc_id"))
+      }
     }),
 
     // STREAMING maintained materialized view: per-customer order stats
@@ -2398,19 +2404,15 @@ object SparkEntry {
     "q123_stream_maintained_view" -> ((s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
         round(col("o_totalprice") * 100).cast(LongType).as("cents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q123").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        o.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(o.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q123") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", o.repartition(3))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.maintainStats(stream, Seq("o_custkey"), "cents",
-          store, "stats", checkpointDir = ckDir).awaitTermination()
+          store, "stats", checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("stats").get.drop("__last_batch")
           .select(col("o_custkey"), col("n"), col("sum_v"), col("min_v"), col("max_v"))
-          .orderBy("o_custkey").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("o_custkey")
+      }
     }),
 
     // STREAMING retrieval serving: the 25 query vectors arrive across TWO
@@ -2423,20 +2425,15 @@ object SparkEntry {
     "q122_stream_knn_serve" -> ((s, dir) => {
       import graft.sync.ParquetStore
       val emb = t(s, dir, "embeddings")
-      val tmp = java.nio.file.Files.createTempDirectory("q122").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        emb.filter(col("vec_id") < 25).repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new ParquetStore(s, outDir)
-        val q = IncrementalStream.knnServe(stream, emb, "vec_id", "embedding",
-          k = 5, store, "served", checkpointDir = ckDir)
-        q.awaitTermination()
+      scratch("q122") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", emb.filter(col("vec_id") < 25).repartition(2))
+        val store = new ParquetStore(s, s"$tmp/out")
+        IncrementalStream.knnServe(stream, emb, "vec_id", "embedding",
+          k = 5, store, "served", checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("served").get
           .select(col("query_id"), col("neighbor_id"))
-          .orderBy("query_id", "neighbor_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("query_id", "neighbor_id")
+      }
     }),
 
     // CONTINUOUS ANN index maintenance — the third side of the serving
@@ -2451,16 +2448,12 @@ object SparkEntry {
     // re-scanned for assignment
     "q124_stream_index_ingest" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val tmp = java.nio.file.Files.createTempDirectory("q124").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        emb.repartition(3).write.parquet(srcDir)
+      scratch("q124") { tmp =>
         val batchIdx = Similarity.ivfIndex(emb, "vec_id", "embedding", numCentroids = 8)
-        val stream = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+        val stream = fileStream(s, s"$tmp/src", emb.repartition(3))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.indexIngest(stream, batchIdx.cents, "vec_id", "embedding",
-          store, "assigned", checkpointDir = ckDir).awaitTermination()
+          store, "assigned", checkpointDir = s"$tmp/ck").awaitTermination()
         val inc = store.read("assigned").get
           .select(col("vec_id"), col("__centroid")).withColumn("__y", lit(1))
         // row-count equality alongside the full-outer parity (the q120
@@ -2474,8 +2467,7 @@ object SparkEntry {
           .join(inc, Seq("vec_id", "__centroid"), "full_outer")
           .agg((violations(col("__x").isNull || col("__y").isNull)
             + when(count(lit(1)) =!= nBatch, 1L).otherwise(0L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // CCNet-style LM-surprise quality partition through a PERSISTED bigram
@@ -2489,15 +2481,14 @@ object SparkEntry {
     // not
     "q125_lm_quality_buckets" -> ((s, dir) => {
       val docs = tw(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q125").toString
-      try {
+      scratch("q125") { tmp =>
         val store = new graft.sync.ParquetStore(s, tmp)
         store.write(NgramStats.bigramCounts(
           docs.filter(col("doc_id") < 250), "doc_id", "text"), "lm")
         NgramStats.oovBuckets(docs.filter(col("doc_id") >= 250),
             store.read("lm").get, "doc_id", "text")
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // The SAME quality partition deployed at ingest: arrivals (doc_id >=
@@ -2509,24 +2500,20 @@ object SparkEntry {
     // were split
     "q126_stream_quality_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q126").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q126") { tmp =>
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val lmStore = new graft.sync.ParquetStore(s, s"$tmp/lm")
         lmStore.write(NgramStats.bigramCounts(
           docs.filter(col("doc_id") < 250), "doc_id", "text"), "lm")
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", arrivals.repartition(2))
         IncrementalStream.qualityGate(stream, lmStore.read("lm").get,
-          "doc_id", "text", store, "verdicts", checkpointDir = ckDir)
+          "doc_id", "text", store, "verdicts", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("verdicts").get
           .select(col("doc_id"), col("n_bigrams"), col("n_oov"), col("bucket"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // REAL pixel resize graded end-to-end: planted PNGs with a per-pixel
@@ -2614,23 +2601,19 @@ object SparkEntry {
     // (batch-partitioning invariance of the scrub)
     "q130_stream_scrub_spans" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q130").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q130") { tmp =>
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val benchStore = new graft.sync.ParquetStore(s, s"$tmp/bench")
         benchStore.write(docs.filter(col("doc_id") < 250), "bench")
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", arrivals.repartition(2))
         IncrementalStream.spanScrubGate(stream, benchStore.read("bench").get,
-          "doc_id", "text", store, "clean", checkpointDir = ckDir)
+          "doc_id", "text", store, "clean", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("clean").get
           .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q131: SQ8 completes the quantization matrix (PQ q117, IVF-PQ q118,
@@ -2729,15 +2712,12 @@ object SparkEntry {
     // (default lgK=12 is ~1.6% rel. error; measured 0.8% at sf0.1)
     "q139_stream_distinct_view" -> ((s, dir) => {
       val e = t(s, dir, "events").select(col("event_type"), col("user_id"))
-      val tmp = java.nio.file.Files.createTempDirectory("q139").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        e.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(e.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q139") { tmp =>
+        val srcDir = s"$tmp/src"
+        val stream = fileStream(s, srcDir, e.repartition(3))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.maintainDistinct(stream, Seq("event_type"), "user_id",
-          store, "distinct", checkpointDir = ckDir).awaitTermination()
+          store, "distinct", checkpointDir = s"$tmp/ck").awaitTermination()
         val maintained = store.read("distinct").get
           .select(col("event_type"), hll_sketch_estimate(col("hll")).as("est"))
         // the same per-file partials the stream saw, unioned in ONE agg
@@ -2756,8 +2736,7 @@ object SparkEntry {
           .agg(violations(
             col("est").isNull || col("best").isNull || col("est") =!= col("best") ||
               abs(col("est") - col("exact")) > col("exact") * 0.05))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q137: temperature-flattened mixture rates over the skewed lang
@@ -2806,9 +2785,7 @@ object SparkEntry {
     "q143_stream_bm25_serve" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q143").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
+      scratch("q143") { tmp =>
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val built = graft.text.TfIdf.buildBm25Index(docs, "doc_id", "text",
           docs.count())
@@ -2821,16 +2798,14 @@ object SparkEntry {
           idxStore.read("dl").get, idxStore.read("df").get,
           built.corpusSize, built.avgdl)
         val qdf = Bm25Queries.toDF("query_id", "qtext")
-        qdf.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(qdf.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+        val stream = fileStream(s, s"$tmp/src", qdf.repartition(2))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.bm25Serve(stream, idx, "doc_id", k = 10,
-          store, "served", checkpointDir = ckDir).awaitTermination()
+          store, "served", checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("served").get
           .select(col("query_id"), col("rank"), col("doc_id"), col("n_terms"))
-          .orderBy("query_id", "rank").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("query_id", "rank")
+      }
     }),
 
     // q144: corpus-SELF surgical span removal — every 8-gram window shared
@@ -2865,24 +2840,20 @@ object SparkEntry {
     // is batch-partitioning-invariant because ids are pinned at gate start
     "q146_stream_encode_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q146").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q146") { tmp =>
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val vocabStore = new graft.sync.ParquetStore(s, s"$tmp/vocab")
         vocabStore.write(graft.text.Vocab.build(docs, "text", topN = 200), "vocab")
-        docs.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         IncrementalStream.encodeGate(stream, vocabStore.read("vocab").get,
-          "doc_id", "text", store, "encoded", checkpointDir = ckDir)
+          "doc_id", "text", store, "encoded", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("encoded").get
           .select(col("doc_id"), posexplode(col("ids")))
           .select(col("doc_id"), col("pos").cast("long").as("pos"),
             col("col").as("token_id"))
-          .orderBy("doc_id", "pos").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id", "pos")
+      }
     }),
 
     // q147: hybrid retrieval — BM25 "more-like-this" (query = each of the
@@ -2926,24 +2897,20 @@ object SparkEntry {
     // DuckDB oracle over the same split). Integer counts end to end
     "q148_stream_overlap_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q148").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q148") { tmp =>
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         idxStore.write(graft.text.Winnow.buildOverlapIndex(
           docs.filter(col("doc_id") < 250), "doc_id", "text"), "fps")
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", arrivals.repartition(2))
         IncrementalStream.overlapGate(stream, idxStore.read("fps").get,
-          "doc_id", "text", store, "pairs", checkpointDir = ckDir)
+          "doc_id", "text", store, "pairs", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("pairs").get
           .select(col("id_a"), col("id_b"), col("n_shared"))
-          .orderBy("id_a", "id_b").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("id_a", "id_b")
+      }
     }),
 
     // q141: winnowing (MOSS) fingerprints, k=3-gram, window w=4 — the full
@@ -2995,19 +2962,15 @@ object SparkEntry {
         .unionByName(emb.filter(col("vec_id") >= 50 && col("vec_id") < 75)
           .select((col("vec_id") + 2000000L).as("vec_id"),
             transform(col("embedding"), x => -x).as("embedding")))
-      val tmp = java.nio.file.Files.createTempDirectory("q128").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        arrivals.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q128") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", arrivals.repartition(2))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.embedDupGate(stream, emb, "vec_id", "embedding",
-          threshold = 0.95, store, "rejects", checkpointDir = ckDir)
+          threshold = 0.95, store, "rejects", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("rejects").get.select(col("vec_id"))
-          .orderBy("vec_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("vec_id")
+      }
     }),
 
     // REAL audio resample graded end-to-end (q120's PCM twin): planted
@@ -3088,9 +3051,8 @@ object SparkEntry {
       import graft.files.Compaction
       import graft.sync.Checksum
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-      val tmp = java.nio.file.Files.createTempDirectory("q88").toString
-      val tableDir = s"$tmp/orders"
-      try {
+      scratch("q88") { tmp =>
+        val tableDir = s"$tmp/orders"
         t(s, dir, "orders").select(cols.map(col): _*)
           .repartition(64).write.parquet(tableDir)
         def fp() = {
@@ -3108,7 +3070,7 @@ object SparkEntry {
           (if (stats.filesAfter < stats.filesBefore) 0L else 1L) +
           (if (fp() == before) 0L else 1L)
         s.range(1).select(lit(violations).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // deep-chain canonicalization: a planted 50-link duplicate CHAIN
@@ -3167,14 +3129,13 @@ object SparkEntry {
     // dest-only file survives (no deletes — §2.4-1 parity holds here)
     "q91_hash_file_sync" -> ((s, dir) => {
       import graft.files.FileSync
-      val tmp = java.nio.file.Files.createTempDirectory("q91").toString
-      val (srcDir, dstDir) = (s"$tmp/src", s"$tmp/dst")
       def put(root: String, name: String, body: String): Unit = {
         val p = java.nio.file.Paths.get(root, name)
         java.nio.file.Files.createDirectories(p.getParent)
         java.nio.file.Files.write(p, body.getBytes("UTF-8"))
       }
-      try {
+      scratch("q91") { tmp =>
+        val (srcDir, dstDir) = (s"$tmp/src", s"$tmp/dst")
         put(srcDir, "a/same.txt", "identical bytes")
         put(srcDir, "b/new.txt", "only in source")
         put(srcDir, "c/modified.txt", "source version 2")
@@ -3193,7 +3154,7 @@ object SparkEntry {
           (if (missing == 0L) 0L else 1L) +
           (if (destOnly == 1L) 0L else 1L)
         s.range(1).select(lit(violations).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // stream-static enrichment join: every streaming event picks up its
@@ -3211,11 +3172,7 @@ object SparkEntry {
       val enriched = IncrementalStream.enrichWithDim(stream, dim, Seq("user_id"))
       val agg = enriched.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("n_ev")).as("sum_n_ev"))
-      val sink = s"q92_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      drainSink(s, sink, s.table(sink).orderBy("event_type"))
+      memorySink(s, agg, "complete")(_.orderBy("event_type"))
     }),
 
     // CONTINUOUS SYNC end-to-end: the reference's nightly
@@ -3239,23 +3196,17 @@ object SparkEntry {
       val ev = t(s, dir, "events").select(col("user_id"),
         expr("ts div 1000").as("ts_us"),
         col("event_id"), round(col("value") * 100).cast(LongType).as("cents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q93").toString
-      val (srcDir, ckDir, destDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/dest")
-      try {
-        ev.repartition(4).write.parquet(srcDir)
+      scratch("q93") { tmp =>
         val minUser = ev.agg(min(col("user_id"))).head.getLong(0)
-        val store = new ParquetStore(s, destDir)
+        val store = new ParquetStore(s, s"$tmp/dest")
         store.write(Seq((-999L, 0L, -1L, 7L), (minUser, -1L, -1L, -12345L))
           .toDF("user_id", "ts_us", "event_id", "cents"), "t")
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", ev.repartition(4))
         IncrementalStream.upsertSync(stream, store, "t",
           pks = Seq("user_id"), orderCols = Seq("ts_us", "event_id"),
-          checkpointDir = ckDir).awaitTermination()
-        // localCheckpoint: the returned plan must not read tmp after the
-        // finally deletes it
-        store.read("t").get.orderBy("user_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          checkpointDir = s"$tmp/ck").awaitTermination()
+        store.read("t").get.orderBy("user_id")
+      }
     }),
 
     // passage-level (substring) dedup: longest shared consecutive token run
@@ -3307,9 +3258,8 @@ object SparkEntry {
       val cols = Seq("event_id", "user_id", "cents")
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast(LongType).as("cents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q97").toString
-      val tableDir = s"$tmp/events_z"
-      try {
+      scratch("q97") { tmp =>
+        val tableDir = s"$tmp/events_z"
         def fp(df: org.apache.spark.sql.DataFrame) = {
           val r = Checksum.tableChecksum(df, cols).head
           (r.getLong(0), r.getLong(1), r.getDecimal(2))
@@ -3323,7 +3273,7 @@ object SparkEntry {
           (if (m.getDouble(2) <= 0.45) 0L else 1L) +
           (if (fp(back) == fp(ev)) 0L else 1L)
         s.range(1).select(lit(violations).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // stats-index pruned read — the PAYOFF of the q97 layout, graded: a
@@ -3337,9 +3287,8 @@ object SparkEntry {
       val cols = Seq("event_id", "user_id", "cents")
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast(LongType).as("cents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q104").toString
-      val tableDir = s"$tmp/events_z"
-      try {
+      scratch("q104") { tmp =>
+        val tableDir = s"$tmp/events_z"
         Layout.clusteredWrite(ev, tableDir, Seq("user_id", "cents"), numFiles = 16)
         val idx = Layout.statsIndex(s, tableDir, Seq("user_id", "cents"))
         val b = ev.agg(min("cents").as("lo"), max("cents").as("hi")).head
@@ -3354,7 +3303,7 @@ object SparkEntry {
           (if (fp(pruned) == fp(ev.filter(col("cents").between(lo, hi)))) 0L else 1L) +
           (if (nFiles >= 1L && nFiles <= 8L) 0L else 1L)
         s.range(1).select(lit(violations).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // snapshot diff (CDC between two extracts): a derived "after" snapshot
@@ -3514,22 +3463,22 @@ object SparkEntry {
         (r.getLong(0), r.getLong(1), r.getDecimal(2))
       }
       val base = fp(o)
-      val tmp = java.nio.file.Files.createTempDirectory("q84").toString
-      val (csvDir, jsonDir, orcDir) = (s"$tmp/csv", s"$tmp/json", s"$tmp/orc")
-      o.write.option("header", "true")
-        .option("nullValue", "\\N").option("emptyValue", "\"\"").csv(csvDir)
-      o.write.json(jsonDir)
-      // ORC: the third columnar format (typed nulls/empties survive without
-      // the text formats' sentinel gymnastics) — Spark-native, no extra dep
-      o.write.orc(orcDir)
-      val viaCsv = fp(s.read.schema(o.schema).option("header", "true")
-        .option("nullValue", "\\N").option("emptyValue", "").csv(csvDir))
-      val viaJson = fp(s.read.schema(o.schema).json(jsonDir))
-      val viaOrc = fp(s.read.schema(o.schema).orc(orcDir))
-      deleteRecursively(tmp)
-      val violations = (if (viaCsv == base) 0L else 1L) +
-        (if (viaJson == base) 0L else 1L) + (if (viaOrc == base) 0L else 1L)
-      s.range(1).select(lit(violations).as("violations"))
+      scratch("q84") { tmp =>
+        val (csvDir, jsonDir, orcDir) = (s"$tmp/csv", s"$tmp/json", s"$tmp/orc")
+        o.write.option("header", "true")
+          .option("nullValue", "\\N").option("emptyValue", "\"\"").csv(csvDir)
+        o.write.json(jsonDir)
+        // ORC: the third columnar format (typed nulls/empties survive without
+        // the text formats' sentinel gymnastics) — Spark-native, no extra dep
+        o.write.orc(orcDir)
+        val viaCsv = fp(s.read.schema(o.schema).option("header", "true")
+          .option("nullValue", "\\N").option("emptyValue", "").csv(csvDir))
+        val viaJson = fp(s.read.schema(o.schema).json(jsonDir))
+        val viaOrc = fp(s.read.schema(o.schema).orc(orcDir))
+        val violations = (if (viaCsv == base) 0L else 1L) +
+          (if (viaJson == base) 0L else 1L) + (if (viaOrc == base) 0L else 1L)
+        s.range(1).select(lit(violations).as("violations"))
+      }
     }),
 
     // typed Aggregator parity: the Dataset-API custom aggregate (case-
@@ -3654,15 +3603,11 @@ object SparkEntry {
     // count, the q124 violations contract)
     "q151_overlap_index_ingest" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q151").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        docs.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q151") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(3))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.overlapIndexIngest(stream, "doc_id", "text",
-          store, "fps", checkpointDir = ckDir).awaitTermination()
+          store, "fps", checkpointDir = s"$tmp/ck").awaitTermination()
         val served = graft.text.Winnow.gateIndex(
             store.read("fps").get.select(col("fp"), col("doc_id")), "doc_id")
           .withColumn("__y", lit(1))
@@ -3673,8 +3618,7 @@ object SparkEntry {
           .join(served, Seq("fp", "doc_id"), "full_outer")
           .agg((violations(col("__x").isNull || col("__y").isNull)
             + when(count(lit(1)) =!= nBatch, 1L).otherwise(0L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q153: the GLOBAL running sum q29 deliberately avoided — computed by
@@ -3706,15 +3650,11 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val shingler: Column => Column =
         c => Dedup.hashedShingles(TextAnalysis.tokenSet(c))
-      val tmp = java.nio.file.Files.createTempDirectory("q158").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        docs.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q158") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(3))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.dedupIndexIngest(stream, "doc_id", "text",
-          shingler, numHashes = 125, bands = 25, store, checkpointDir = ckDir)
+          shingler, numHashes = 125, bands = 25, store, checkpointDir = s"$tmp/ck")
           .awaitTermination()
         // fanOut on this batch arm A/B'd and REVERTED (r19): 3.65 -> 4.24/5.10
         // solo — the MinHash build's explode already re-spreads at its own
@@ -3742,8 +3682,7 @@ object SparkEntry {
             + when(count(lit(1)) =!= nSet, 1L).otherwise(0L)).as("violations"))
         bandViol.unionByName(setViol)
           .agg(sum(col("violations")).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q157: the COMPLETE BPE pipeline tail under a fixed merge list —
@@ -3818,24 +3757,20 @@ object SparkEntry {
     // deployed at ingest
     "q155_stream_encode_join_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q155").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q155") { tmp =>
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val vocabStore = new graft.sync.ParquetStore(s, s"$tmp/vocab")
         vocabStore.write(graft.text.Vocab.build(docs, "text", topN = 200), "vocab")
-        docs.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         IncrementalStream.encodeGateJoin(stream, vocabStore.read("vocab").get,
-          "doc_id", "text", store, "encoded", checkpointDir = ckDir)
+          "doc_id", "text", store, "encoded", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("encoded").get
           .select(col("doc_id"), posexplode(col("ids")))
           .select(col("doc_id"), col("pos").cast("long").as("pos"),
             col("col").as("token_id"))
-          .orderBy("doc_id", "pos").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id", "pos")
+      }
     }),
 
     // q154: the APPLY side of BPE training — the codegen'd merge-replay
@@ -4021,21 +3956,18 @@ object SparkEntry {
     "q169_stream_classify_gate" -> ((s, dir) => {
       val (_, model) = svmTrained(s, dir)
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q169").toString
-      try {
+      scratch("q169") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val wStore = new graft.sync.ParquetStore(s, s"$tmp/w")
         wStore.write(Classifier.weightsTable(s, model), "weights")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         IncrementalStream.classifierGate(stream, wStore.read("weights").get,
           "doc_id", "text", store, "scored", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("scored").get
           .select(col("doc_id"), col("margin_micros"), col("pred"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q170: the unigram tokenizer DEPLOYED at ingest — the pinned piece
@@ -4047,17 +3979,14 @@ object SparkEntry {
     // start (the q146 encode-gate contract for the unigram family)
     "q170_stream_unigram_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q170").toString
-      try {
+      scratch("q170") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val pStore = new graft.sync.ParquetStore(s, s"$tmp/p")
         pStore.write(s.createDataFrame(
             UnigramPinned.map(p => Unigram.UnigramPiece(p._1, 0L, p._2)))
           .select(col("piece"), col("cnt"), col("scoreMilli").as("score_milli")),
           "pieces")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         IncrementalStream.unigramGate(stream, pStore.read("pieces").get,
           "doc_id", "text", store, "pieces", checkpointDir = s"$tmp/ck")
           .awaitTermination()
@@ -4065,8 +3994,8 @@ object SparkEntry {
           .select(col("doc_id"), posexplode(col("pieces")))
           .toDF("doc_id", "pos", "piece")
           .select(col("doc_id"), col("pos").cast(LongType), col("piece"))
-          .orderBy("doc_id", "pos").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id", "pos")
+      }
     }),
 
     // q171: the full Gopher quality-rule battery (q18's qualityOk is the
@@ -4090,17 +4019,14 @@ object SparkEntry {
     // filter stage of the serving stack, before the model gates
     "q173_stream_gopher_gate" -> ((s, dir) => {
       val planted = gopherPlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q173").toString
-      try {
+      scratch("q173") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
-        planted.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(planted.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", planted.repartition(2))
         IncrementalStream.gopherGate(stream, "doc_id", "text",
           store, "quality", checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("quality").get.drop("__run", "__batch")
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q172: the compression-ratio repetition signal — deflate every doc
@@ -4216,20 +4142,16 @@ object SparkEntry {
         "n_chars_positive" -> (col("n_chars") > 0),
         "n_chars_under_500" -> (col("n_chars") < 500),
         "lang_known" -> col("lang").isin("en", "fr", "es", "zh", "de"))
-      val tmp = java.nio.file.Files.createTempDirectory("q177").toString
-      try {
+      scratch("q177") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
-        docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-          .write.mode("append").parquet(s"$tmp/src")
-        docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-          .write.mode("append").parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        // two files, even then odd ids; the second stream reads both
+        fileStream(s, s"$tmp/src", docs.filter(col("doc_id") % 2 === 0).coalesce(1))
+        val stream = fileStream(s, s"$tmp/src", docs.filter(col("doc_id") % 2 === 1).coalesce(1))
         IncrementalStream.expectationsGate(stream, checks,
           store, "dq", checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("dq").get.drop("__run", "__batch", "__obs")
-          .orderBy("check_name", "n_violations").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("check_name", "n_violations")
+      }
     }),
 
     // q178: column profiling — the schema-discovery report run BEFORE
@@ -4347,15 +4269,12 @@ object SparkEntry {
     // q146/q170 contract for the WordPiece family)
     "q182_stream_wordpiece_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q182").toString
-      try {
+      scratch("q182") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val vStore = new graft.sync.ParquetStore(s, s"$tmp/v")
         import s.implicits._
         vStore.write(WordPiecePinned.toDF("piece"), "vocab")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         IncrementalStream.wordPieceGate(stream, vStore.read("vocab").get,
           "doc_id", "text", store, "pieces", checkpointDir = s"$tmp/ck",
           maxInputChars = WordPieceCap)
@@ -4364,8 +4283,8 @@ object SparkEntry {
           .select(col("doc_id"), posexplode(col("pieces")))
           .toDF("doc_id", "pos", "piece")
           .select(col("doc_id"), col("pos").cast(LongType), col("piece"))
-          .orderBy("doc_id", "pos").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id", "pos")
+      }
     }),
 
     // q183: CONTINUOUS line-index maintenance — the C4 line-dedup member
@@ -4380,20 +4299,16 @@ object SparkEntry {
     // defining semantics an append-time gate cannot provide)
     "q183_stream_line_index" -> ((s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q183").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        docs.repartition(3).write.parquet(srcDir)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q183") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(3))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.lineIndexIngest(stream, "doc_id", "text",
-          store, "lines", checkpointDir = ckDir).awaitTermination()
+          store, "lines", checkpointDir = s"$tmp/ck").awaitTermination()
         graft.dedup.Dedup.lineDedupFromIndex(
             store.read("lines").get.select(col("doc_id"), col("pos"), col("line")),
             "doc_id", maxDf = 2)
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q195/q196: snapshot DRIFT reports — the between-runs monitoring
@@ -4465,13 +4380,10 @@ object SparkEntry {
     // so the report cannot depend on how the stream was batched
     "q197_stream_drift_monitor" -> ((s, dir) => {
       val e = t(s, dir, "events")
-      val tmp = java.nio.file.Files.createTempDirectory("q197").toString
-      try {
+      scratch("q197") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         val arrivals = e.filter(col("user_id") % 2 === 1)
-        arrivals.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", arrivals.repartition(2))
         IncrementalStream.maintainCounts(stream, "event_type",
           store, "counts", checkpointDir = s"$tmp/ck")
           .awaitTermination()
@@ -4480,8 +4392,8 @@ object SparkEntry {
         graft.operators.Drift.categoryDriftFromCounts(baseline,
             store.read("counts").get.select(col("event_type"), col("n")),
             "event_type")
-          .orderBy("category").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("category")
+      }
     }),
 
     // q194: TAKEDOWN propagation — the opt-out/right-to-be-forgotten
@@ -4496,8 +4408,7 @@ object SparkEntry {
     // filtered corpus
     "q194_takedown_line_index" -> ((s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q194").toString
-      try {
+      scratch("q194") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         store.write(graft.dedup.Dedup.lineIndexRows(docs, "doc_id", "text"),
           "lines")
@@ -4506,8 +4417,8 @@ object SparkEntry {
         require(removed > 0L, "q194: the takedown must actually remove rows")
         graft.dedup.Dedup.lineDedupFromIndex(store.read("lines").get,
             "doc_id", maxDf = 2)
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q201: ONLINE takedown — the erasure lands BETWEEN micro-batches of
@@ -4522,21 +4433,14 @@ object SparkEntry {
     // q194 oracle, shared per the q190/q193 precedent
     "q201_online_takedown" -> ((s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q201").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      scratch("q201") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        def ingestAvailable(): Unit = {
-          val stream = s.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-          IncrementalStream.lineIndexIngest(stream, "doc_id", "text",
-            store, "lines", checkpointDir = ckDir).awaitTermination()
-        }
+        def ingest(rows: DataFrame): Unit =
+          IncrementalStream.lineIndexIngest(fileStream(s, s"$tmp/src", rows),
+            "doc_id", "text", store, "lines", checkpointDir = s"$tmp/ck").awaitTermination()
         // micro-batch 1: half the corpus (both survivors and
         // to-be-tombstoned docs) folds into the index
-        docs.filter(col("doc_id") % 2 === 0).repartition(1)
-          .write.parquet(srcDir)
-        ingestAvailable()
+        ingest(docs.filter(col("doc_id") % 2 === 0).repartition(1))
         // the takedown lands mid-stream: the ingest checkpoint lives on,
         // nothing stops, no index row is touched
         val added = graft.sync.Takedown.tombstone(store,
@@ -4544,17 +4448,15 @@ object SparkEntry {
         require(added > 0L, "q201: the tombstone must actually record ids")
         // micro-batch 2: the other half arrives AFTER the takedown —
         // its tombstoned documents' rows append but must never serve
-        docs.filter(col("doc_id") % 2 === 1).repartition(1)
-          .write.mode("append").parquet(srcDir)
-        ingestAvailable()
+        ingest(docs.filter(col("doc_id") % 2 === 1).repartition(1))
         graft.dedup.Dedup.lineDedupFromIndex(
             graft.sync.Takedown.withoutTombstones(
               store.read("lines").get
                 .select(col("doc_id"), col("pos"), col("line")),
               "doc_id", store),
             "doc_id", maxDf = 2)
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q207: MOJIBAKE repair — the highest-yield ftfy rule (UTF-8 decoded
@@ -4719,13 +4621,10 @@ object SparkEntry {
     // q190's direct corpus scrub — the SAME DuckDB oracle grades both
     "q193_span_index_serve" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q193").toString
-      try {
+      scratch("q193") { tmp =>
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val corpus = docs.filter(col("doc_id") < 250)
-        corpus.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", corpus.repartition(2))
         IncrementalStream.dupSpanIndexIngest(stream, "doc_id", "text",
           idxStore, "grams", checkpointDir = s"$tmp/ck")
           .awaitTermination()
@@ -4734,8 +4633,8 @@ object SparkEntry {
             idxStore.read("grams").get.select("doc_id", "pos", "g"),
             "doc_id", "text", k = 8, minRunTokens = 20, maxDocFreq = 20)
           .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q205: ONLINE takedown through the SPAN-INDEX family — q201's
@@ -4749,26 +4648,17 @@ object SparkEntry {
     // Oracle: the q190 chain with the ref side filtered to survivors
     "q205_takedown_span_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q205").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      scratch("q205") { tmp =>
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val corpus = docs.filter(col("doc_id") < 250)
-        def ingestAvailable(): Unit = {
-          val stream = s.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-          IncrementalStream.dupSpanIndexIngest(stream, "doc_id", "text",
-            idxStore, "grams", checkpointDir = ckDir).awaitTermination()
-        }
-        corpus.filter(col("doc_id") % 2 === 0).repartition(1)
-          .write.parquet(srcDir)
-        ingestAvailable()
+        def ingest(rows: DataFrame): Unit =
+          IncrementalStream.dupSpanIndexIngest(fileStream(s, s"$tmp/src", rows),
+            "doc_id", "text", idxStore, "grams", checkpointDir = s"$tmp/ck").awaitTermination()
+        ingest(corpus.filter(col("doc_id") % 2 === 0).repartition(1))
         val added = graft.sync.Takedown.tombstone(idxStore,
           corpus.filter(col("doc_id") < 100).select(col("doc_id")))
         require(added > 0L, "q205: the tombstone must actually record ids")
-        corpus.filter(col("doc_id") % 2 === 1).repartition(1)
-          .write.mode("append").parquet(srcDir)
-        ingestAvailable()
+        ingest(corpus.filter(col("doc_id") % 2 === 1).repartition(1))
         Decontaminate.scrubDuplicatedSpansAgainstIndex(
             docs.filter(col("doc_id") >= 250),
             graft.sync.Takedown.withoutTombstones(
@@ -4776,8 +4666,8 @@ object SparkEntry {
               "doc_id", idxStore),
             "doc_id", "text", k = 8, minRunTokens = 20, maxDocFreq = 20)
           .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q192: WATER-FILLING mixture assembly — the Pile/Dolma budget rule
@@ -4873,22 +4763,19 @@ object SparkEntry {
     // precedent, with the corpus instead of a benchmark as the source)
     "q190_stream_dup_span_gate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q190").toString
-      try {
+      scratch("q190") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val refStore = new graft.sync.ParquetStore(s, s"$tmp/ref")
         refStore.write(docs.filter(col("doc_id") < 250), "ref")
         val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", arrivals.repartition(2))
         IncrementalStream.dupSpanScrubGate(stream, refStore.read("ref").get,
           "doc_id", "text", store, "clean", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("clean").get
           .select(col("doc_id"), array_join(col("clean_tokens"), " ").as("clean_text"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q187: TRAINED language identification — the Cavnar–Trenkle
@@ -4930,21 +4817,18 @@ object SparkEntry {
     // threshold
     "q186_stream_line_gate" -> ((s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q186").toString
-      try {
+      scratch("q186") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val hot = graft.dedup.Dedup.hotLines(
           graft.dedup.Dedup.lineIndexRows(docs, "doc_id", "text"), maxDf = 2)
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         IncrementalStream.lineDedupGate(stream, hot, "doc_id", "text",
           store, "clean", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("clean").get
           .select(col("doc_id"), col("text_clean"), col("n_kept"), col("n_dropped"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q185: MATERIALIZED training windows — q66's packedSpans taken to
@@ -5049,8 +4933,7 @@ object SparkEntry {
       // every use of docs is per-row-heavy fingerprint work (4 appended
       // ingest rounds + the from-scratch parity rebuild) — fan the scan
       val docs = tw(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q161").toString
-      try {
+      scratch("q161") { tmp =>
         val store = new graft.sync.ParquetStore(s, tmp)
         val batchConds = Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 === 1,
           col("doc_id") % 3 === 2, col("doc_id") % 3 === 1)
@@ -5068,8 +4951,7 @@ object SparkEntry {
           .join(snap, Seq("fp", "doc_id"), "full_outer")
           .agg((violations(col("__x").isNull || col("__y").isNull)
             + when(count(lit(1)) =!= nBatch, 1L).otherwise(0L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q208: the BPE family DEPLOYED at ingest — the fourth tokenizer
@@ -5086,14 +4968,11 @@ object SparkEntry {
     "q208_stream_bpe_gate" -> ((s, dir) => {
       import s.implicits._
       val docs = bytePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q208").toString
-      try {
+      scratch("q208") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         val mStore = new graft.sync.ParquetStore(s, s"$tmp/m")
         mStore.write(BytePinnedMerges.toDF("step", "left", "right"), "merges")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         IncrementalStream.bpeGate(stream, mStore.read("merges").get,
           "doc_id", "text", store, "pieces", checkpointDir = s"$tmp/ck")
           .awaitTermination()
@@ -5109,8 +4988,7 @@ object SparkEntry {
             + when(count(lit(1)) =!= nDocs, 1L).otherwise(0L)
             + when(max(size(filter(col("__want"), p => length(p) > 1))) < 1, 1L)
               .otherwise(0L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q209: CONTINUOUS image-dedup ingest — q115's planted dHash corpus
@@ -5124,12 +5002,9 @@ object SparkEntry {
     "q209_stream_image_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"))
       val media = plantedImageMedia(s, docs)
-      val tmp = java.nio.file.Files.createTempDirectory("q209").toString
-      try {
+      scratch("q209") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        media.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(media.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", media.repartition(2))
         def fp(b: DataFrame): DataFrame = Multimodal.dhashImages(b)(s).toDF()
           .filter(col("phash") =!= 0L && col("phash") =!= -1L)
         IncrementalStream.packedDupIngest(stream, fp, "doc_id", "phash",
@@ -5153,7 +5028,7 @@ object SparkEntry {
             + when(count(lit(1)) =!= nSig, 1L).otherwise(0L)).as("violations"))
           .head.getLong(0)
         s.range(1).select(lit(pairV + idxV).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q210: CONTINUOUS audio-dedup ingest — the same probe-then-append
@@ -5166,12 +5041,9 @@ object SparkEntry {
     "q210_stream_audio_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"))
       val media = plantedAudioMedia(s, docs)
-      val tmp = java.nio.file.Files.createTempDirectory("q210").toString
-      try {
+      scratch("q210") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        media.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(media.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", media.repartition(2))
         def fp(b: DataFrame): DataFrame = Multimodal.afingerprintAudio(b)(s).toDF()
           .filter(col("ahash") =!= 0L && col("ahash") =!= -1L)
         IncrementalStream.packedDupIngest(stream, fp, "doc_id", "ahash",
@@ -5197,7 +5069,7 @@ object SparkEntry {
             + when(count(lit(1)) =!= nSig, 1L).otherwise(0L)).as("violations"))
           .head.getLong(0)
         s.range(1).select(lit(pairV + idxV).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q211: ONLINE takedown through the MINHASH BAND-INDEX family —
@@ -5215,48 +5087,33 @@ object SparkEntry {
     "q211_takedown_band_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") < 250)
-      val tmp = java.nio.file.Files.createTempDirectory("q211").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      scratch("q211") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        def ingestAvailable(): Unit = {
-          val stream = s.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-          IncrementalStream.dedupIndexIngest(stream, "doc_id", "text",
+        def ingest(rows: DataFrame): Unit =
+          IncrementalStream.dedupIndexIngest(fileStream(s, s"$tmp/src", rows), "doc_id", "text",
             c => Dedup.hashedShingles(TextAnalysis.tokenSet(c)),
             numHashes = 125, bands = 25, store = store,
-            checkpointDir = ckDir).awaitTermination()
-        }
-        corpus.filter(col("doc_id") % 2 === 0).repartition(1)
-          .write.parquet(srcDir)
-        ingestAvailable()
+            checkpointDir = s"$tmp/ck").awaitTermination()
+        ingest(corpus.filter(col("doc_id") % 2 === 0).repartition(1))
         val added = graft.sync.Takedown.tombstone(store,
           corpus.filter(col("doc_id") < 100).select(col("doc_id")))
         require(added > 0L, "q211: the tombstone must actually record ids")
-        corpus.filter(col("doc_id") % 2 === 1).repartition(1)
-          .write.mode("append").parquet(srcDir)
-        ingestAvailable()
+        ingest(corpus.filter(col("doc_id") % 2 === 1).repartition(1))
         val index = Dedup.NearDupIndex(
           graft.sync.Takedown.withoutTombstones(
             store.read("band_index").get, "id_b", store),
           graft.sync.Takedown.withoutTombstones(
             store.read("shingle_sets").get, "id_b", store))
-        val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(s"$tmp/arr")
-        val arrStream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/arr/*.parquet")
+        val arrStream = fileStream(s, s"$tmp/arr",
+          docs.filter(col("doc_id") >= 250).repartition(2))
         val dups = Dedup.duplicateIdsStream(
           arrStream, index, "doc_id", "text",
           c => Dedup.hashedShingles(TextAnalysis.tokenSet(c)),
           num = 9, den = 10, numHashes = 125, bands = 25,
           eventTimeCol = timestamp_micros(lit(86400000000L)),
           watermarkDelay = "10 minutes")
-        val sink = s"q211_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val q = dups.writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        drainSink(s, sink, s.table(sink).orderBy("doc_id"))
-      } finally deleteRecursively(tmp)
+        memorySink(s, dups)(_.orderBy("doc_id"))
+      }
     }),
 
     // q212: takedown through the ANN SERVING family — vector-database
@@ -5276,8 +5133,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 25)
       val corpus = emb.filter(col("vec_id") >= 25)
-      val tmp = java.nio.file.Files.createTempDirectory("q212").toString
-      try {
+      scratch("q212") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val batchIdx = Similarity.ivfIndex(corpus, "vec_id", "embedding",
           numCentroids = 8)
@@ -5285,21 +5141,14 @@ object SparkEntry {
             "embedding", 5, nprobe = 8)
           .select(col("neighbor_id")).distinct().orderBy("neighbor_id")
           .limit(5).localCheckpoint()
-        def ingestAvailable(): Unit = {
-          val stream = s.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
-          IncrementalStream.indexIngest(stream, batchIdx.cents, "vec_id",
-            "embedding", store, "assigned", checkpointDir = s"$tmp/ck")
+        def ingest(rows: DataFrame): Unit =
+          IncrementalStream.indexIngest(fileStream(s, s"$tmp/src", rows), batchIdx.cents,
+            "vec_id", "embedding", store, "assigned", checkpointDir = s"$tmp/ck")
             .awaitTermination()
-        }
-        corpus.filter(col("vec_id") % 2 === 0).repartition(1)
-          .write.parquet(s"$tmp/src")
-        ingestAvailable()
+        ingest(corpus.filter(col("vec_id") % 2 === 0).repartition(1))
         val added = graft.sync.Takedown.tombstone(store, victims)
         require(added > 0L, "q212: the tombstone must actually record ids")
-        corpus.filter(col("vec_id") % 2 === 1).repartition(1)
-          .write.mode("append").parquet(s"$tmp/src")
-        ingestAvailable()
+        ingest(corpus.filter(col("vec_id") % 2 === 1).repartition(1))
         val gated = Similarity.knnJoinIvf(
           Similarity.IvfIndex(batchIdx.cents,
             graft.sync.Takedown.withoutTombstones(
@@ -5318,7 +5167,7 @@ object SparkEntry {
           .localCheckpoint()
         graft.Checkpoints.release(victims)
         out
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q213: continuous TEXT SimHash dedup ingest — the SAME
@@ -5333,12 +5182,9 @@ object SparkEntry {
     // vacuously)
     "q213_stream_simhash_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q213").toString
-      try {
+      scratch("q213") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         def fp(b: DataFrame): DataFrame = b
           .select(col("doc_id"),
             Dedup.hashedShingles(TextAnalysis.tokenSet(col("text"))).as("__sh"))
@@ -5357,8 +5203,7 @@ object SparkEntry {
         got.except(want).unionByName(want.except(got))
           .agg((count(lit(1)).cast(LongType)
             + lit(if (nSigs == nDocs) 0L else 1L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q214: online takedown through the WINNOW OVERLAP-INDEX family —
@@ -5377,30 +5222,19 @@ object SparkEntry {
     "q214_takedown_overlap_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") < 250)
-      val tmp = java.nio.file.Files.createTempDirectory("q214").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      scratch("q214") { tmp =>
         val idxStore = new graft.sync.ParquetStore(s, s"$tmp/idx")
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
-        def ingestAvailable(): Unit = {
-          val stream = s.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-          IncrementalStream.overlapIndexIngest(stream, "doc_id", "text",
-            idxStore, "fps", checkpointDir = ckDir).awaitTermination()
-        }
-        corpus.filter(col("doc_id") % 2 === 0).repartition(1)
-          .write.parquet(srcDir)
-        ingestAvailable()
+        def ingest(rows: DataFrame): Unit =
+          IncrementalStream.overlapIndexIngest(fileStream(s, s"$tmp/src", rows),
+            "doc_id", "text", idxStore, "fps", checkpointDir = s"$tmp/ck").awaitTermination()
+        ingest(corpus.filter(col("doc_id") % 2 === 0).repartition(1))
         val added = graft.sync.Takedown.tombstone(idxStore,
           corpus.filter(col("doc_id") < 100).select(col("doc_id")))
         require(added > 0L, "q214: the tombstone must actually record ids")
-        corpus.filter(col("doc_id") % 2 === 1).repartition(1)
-          .write.mode("append").parquet(srcDir)
-        ingestAvailable()
-        val arrivals = docs.filter(col("doc_id") >= 250)
-        arrivals.repartition(2).write.parquet(s"$tmp/arr")
-        val arrStream = s.readStream.schema(arrivals.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/arr/*.parquet")
+        ingest(corpus.filter(col("doc_id") % 2 === 1).repartition(1))
+        val arrStream = fileStream(s, s"$tmp/arr",
+          docs.filter(col("doc_id") >= 250).repartition(2))
         IncrementalStream.overlapGate(arrStream,
           graft.text.Winnow.gateIndex(
             graft.sync.Takedown.withoutTombstones(
@@ -5410,8 +5244,8 @@ object SparkEntry {
           .awaitTermination()
         store.read("pairs").get
           .select(col("id_a"), col("id_b"), col("n_shared"))
-          .orderBy("id_a", "id_b").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("id_a", "id_b")
+      }
     }),
 
     // q215: classifier THRESHOLD SWEEP — the curation knob audit run
@@ -5571,12 +5405,9 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 25)
       val (k, nShort, lam) = (5, 12, 500)
-      val tmp = java.nio.file.Files.createTempDirectory("q220").toString
-      try {
+      scratch("q220") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
-        queries.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(queries.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", queries.repartition(2))
         IncrementalStream.mmrServe(stream, emb, "vec_id", "embedding",
           k, nShort, lambdaPermille = lam, store = store, table = "served",
           checkpointDir = s"$tmp/ck").awaitTermination()
@@ -5590,8 +5421,7 @@ object SparkEntry {
             Seq("query_id", "mmr_rank", "neighbor_id"), "full_outer")
           .agg((violations(col("__x").isNull || col("__y").isNull)
             + when(count(lit(1)) =!= nWant, 1L).otherwise(0L)).as("violations"))
-          .localCheckpoint()
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q221: per-document n-gram NOVELTY RATE against a reference corpus —
@@ -5751,12 +5581,9 @@ object SparkEntry {
     // bounded, the sketch when it is not
     "q227_stream_topk_view" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("q227").toString
-      try {
+      scratch("q227") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
           .select(col("source"),
             explode(TextAnalysis.tokens(col("text"))).as("token"))
         IncrementalStream.maintainCountsKeys(stream, Seq("source", "token"),
@@ -5766,8 +5593,8 @@ object SparkEntry {
               .select(col("source"), col("token"), col("n")),
             Seq("source"), Seq("token"), k = 3)
           .select(col("source"), col("rank"), col("token"), col("n"))
-          .orderBy("source", "rank").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("source", "rank")
+      }
     }),
 
     // q228: SCENE-CHANGE detection over the shared q160 planted MJPEG
@@ -5910,25 +5737,22 @@ object SparkEntry {
           .when(m === 2, concat(lit("http://EXAMPLE.com:80/g/"), g, lit("?b=2&a=1")))
           .otherwise(concat(lit("http://example.com/g/"), g, lit("?a=1&b=2#z")))
       val arrivals = docs.select(col("doc_id"), url.as("url"))
-      val tmp = java.nio.file.Files.createTempDirectory("q234").toString
-      try {
+      scratch("q234") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         Seq(col("doc_id") < 250, col("doc_id") >= 250).zipWithIndex.foreach {
           case (cond, i) =>
             // partitioned BY GROUP: a canonical key never spans the
             // round's two files, so the in-round winner is the group
             // minimum whichever file the scheduler drains first
-            arrivals.filter(cond).repartition(2, col("doc_id") % 100)
-              .write.parquet(s"$tmp/src$i")
             IncrementalStream.frontierGate(
-              s.readStream.schema(arrivals.schema)
-                .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src$i/*.parquet"),
+              fileStream(s, s"$tmp/src$i",
+                arrivals.filter(cond).repartition(2, col("doc_id") % 100)),
               "doc_id", "url", store, "seen", checkpointDir = s"$tmp/ck$i")
               .awaitTermination()
         }
         store.read("seen").get.select(col("doc_id"), col("url_norm"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q235: SCHEMA drift report — the sync tool's canonical failure
@@ -5975,11 +5799,8 @@ object SparkEntry {
       val facts = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"),
           (col("l_linenumber") % 3 + 1).cast(LongType).as("ver"))
-      val tmp = java.nio.file.Files.createTempDirectory("q237").toString
-      try {
-        facts.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(facts.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+      scratch("q237") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", facts.repartition(2))
         val enriched = History.pitJoin(stream, h, Seq("o_orderkey"), "ver")
           .select(col("o_orderkey"), col("l_linenumber"), col("ver"),
             coalesce(col("o_custkey").cast(LongType), lit(-1L)).as("custkey_at"),
@@ -5995,8 +5816,8 @@ object SparkEntry {
           .trigger(Trigger.AvailableNow()).start()
           .awaitTermination()
         s.read.parquet(s"$tmp/served")
-          .orderBy("o_orderkey", "l_linenumber").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("o_orderkey", "l_linenumber")
+      }
     }),
 
     // q238: SENTENCE segmentation — the unit below the document, planted
@@ -6059,8 +5880,7 @@ object SparkEntry {
       val log1 = s1.withColumn("ver", lit(1L))
         .unionByName(delta(s2, s1).withColumn("ver", lit(2L)))
       val log2 = delta(s3, s2).withColumn("ver", lit(3L))
-      val tmp = java.nio.file.Files.createTempDirectory("q240").toString
-      try {
+      scratch("q240") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         // one file per round -> one micro-batch per round; the SAME
         // checkpoint across rounds keeps the lineage (the maintained-view
@@ -6077,8 +5897,8 @@ object SparkEntry {
         store.read("history").get.drop("__last_batch", "__run")
           .select(col("o_orderkey"), col("o_custkey"), col("cents"),
             col("valid_from"), coalesce(col("valid_to"), lit(0L)).as("valid_to"))
-          .orderBy("o_orderkey", "valid_from").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("o_orderkey", "valid_from")
+      }
     }),
 
     // q241: VIDEO near-dup — the FIFTH dedup modality (text/image/
@@ -6116,12 +5936,9 @@ object SparkEntry {
         .select(col("doc_id").cast(LongType).as("doc_id"))
         .filter(col("doc_id") < 126)
       val media = plantedVideoMedia(s, docs)
-      val tmp = java.nio.file.Files.createTempDirectory("q242").toString
-      try {
+      scratch("q242") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        media.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(media.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", media.repartition(2))
         def fp(b: DataFrame): DataFrame = Multimodal.videoSignature(
             Multimodal.decodeFramesOf(b)(s).toDF(), thresholdMilli = 15000L)
           .filter(col("vsig") =!= 0L && col("vsig") =!= -1L)
@@ -6146,7 +5963,7 @@ object SparkEntry {
             + when(count(lit(1)) =!= nSig, 1L).otherwise(0L)).as("violations"))
           .head.getLong(0)
         s.range(1).select(lit(pairV + idxV).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q243: PER-HOST frontier budgeting — q234's exact-dedup gate with
@@ -6165,25 +5982,22 @@ object SparkEntry {
           concat(lit("http://hot.example.com/p/"), id))
         .otherwise(concat(lit("http://s"), id, lit(".example.com/")))
       val arrivals = docs.select(col("doc_id"), url.as("url"))
-      val tmp = java.nio.file.Files.createTempDirectory("q243").toString
-      try {
+      scratch("q243") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         Seq(col("doc_id") < 250, col("doc_id") >= 250).zipWithIndex.foreach {
           case (cond, i) =>
             // partitioned BY HOST CLASS: the hot host never spans the
             // round's two files, so the in-round winners are its lowest
             // ids whichever file the scheduler drains first
-            arrivals.filter(cond).repartition(2, col("doc_id") % 5 < 2)
-              .write.parquet(s"$tmp/src$i")
             IncrementalStream.frontierGate(
-              s.readStream.schema(arrivals.schema)
-                .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src$i/*.parquet"),
+              fileStream(s, s"$tmp/src$i",
+                arrivals.filter(cond).repartition(2, col("doc_id") % 5 < 2)),
               "doc_id", "url", store, "seen", checkpointDir = s"$tmp/ck$i",
               maxPerHost = Some(10L)).awaitTermination()
         }
         store.read("seen").get.select(col("doc_id"), col("url_norm"), col("host"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q244: COMPACTION UNDER SERVING — the tombstone lifecycle's last
@@ -6203,30 +6017,22 @@ object SparkEntry {
     // over exactly the surviving documents — q194's oracle
     "q244_compaction_under_serving" -> ((s, dir) => {
       val docs = linePlanted(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q244").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      scratch("q244") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
-        def ingestAvailable(): Unit = {
-          val stream = s.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-          IncrementalStream.lineIndexIngest(stream, "doc_id", "text",
-            store, "lines", checkpointDir = ckDir).awaitTermination()
-        }
+        def ingest(rows: DataFrame): Unit =
+          IncrementalStream.lineIndexIngest(fileStream(s, s"$tmp/src", rows),
+            "doc_id", "text", store, "lines", checkpointDir = s"$tmp/ck").awaitTermination()
         def serve(): DataFrame = graft.dedup.Dedup.lineDedupFromIndex(
           graft.sync.Takedown.withoutTombstones(
             store.read("lines").get
               .select(col("doc_id"), col("pos"), col("line")),
             "doc_id", store),
           "doc_id", maxDf = 2)
-        docs.filter(col("doc_id") % 3 === 0).repartition(1).write.parquet(srcDir)
-        ingestAvailable()
+        ingest(docs.filter(col("doc_id") % 3 === 0).repartition(1))
         val added = graft.sync.Takedown.tombstone(store,
           docs.filter(col("doc_id") >= 400).select(col("doc_id")))
         require(added > 0L, "q244: the tombstone must actually record ids")
-        docs.filter(col("doc_id") % 3 === 1).repartition(1)
-          .write.mode("append").parquet(srcDir)
-        ingestAvailable()
+        ingest(docs.filter(col("doc_id") % 3 === 1).repartition(1))
         val pre = serve().localCheckpoint()
         val removed = graft.sync.Takedown.compactTombstones(store,
           Seq("lines" -> "doc_id"))
@@ -6242,11 +6048,9 @@ object SparkEntry {
         require(drift == 0L,
           s"q244: serving changed across the compaction ($drift rows differ)")
         graft.Checkpoints.release(pre)
-        docs.filter(col("doc_id") % 3 === 2 && col("doc_id") < 400).repartition(1)
-          .write.mode("append").parquet(srcDir)
-        ingestAvailable()
-        serve().orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+        ingest(docs.filter(col("doc_id") % 3 === 2 && col("doc_id") < 400).repartition(1))
+        serve().orderBy("doc_id")
+      }
     }),
 
     // q245: streamed CDC history maintenance — q240's upsert-only feed
@@ -6281,8 +6085,7 @@ object SparkEntry {
         .unionByName(stamp(dels(s1, s2), 2L, "d"))
       val log2 = stamp(ups(s3, s2), 3L, "u")
         .unionByName(stamp(dels(s2, s3), 3L, "d"))
-      val tmp = java.nio.file.Files.createTempDirectory("q245").toString
-      try {
+      scratch("q245") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         def ingest(log: DataFrame): Unit = {
           log.repartition(1).write.mode("append").parquet(s"$tmp/src")
@@ -6297,8 +6100,8 @@ object SparkEntry {
         store.read("history").get.drop("__last_batch", "__run")
           .select(col("o_orderkey"), col("o_custkey"), col("cents"),
             col("valid_from"), coalesce(col("valid_to"), lit(0L)).as("valid_to"))
-          .orderBy("o_orderkey", "valid_from").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("o_orderkey", "valid_from")
+      }
     }),
 
     // q246: the extraction gate DEPLOYED — raw HTML pages stream across
@@ -6313,20 +6116,17 @@ object SparkEntry {
     "q246_stream_main_content" -> ((s, dir) => {
       val pages = t(s, dir, "documents")
         .select(col("doc_id"), mainContentPlantedHtml.as("page"))
-      val tmp = java.nio.file.Files.createTempDirectory("q246").toString
-      try {
+      scratch("q246") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
-        pages.repartition(2).write.parquet(s"$tmp/src")
         IncrementalStream.mainContentGate(
-          s.readStream.schema(pages.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet"),
+          fileStream(s, s"$tmp/src", pages.repartition(2)),
           "doc_id", "page", store, "extracted", checkpointDir = s"$tmp/ck",
           minChars = 15, maxLinkPermille = 300, minKept = 3)
           .awaitTermination()
         store.read("extracted").get
           .select(col("doc_id"), col("main"), col("n_blocks"), col("n_kept"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q247: ONLINE takedown through the PACKED-FINGERPRINT family — the
@@ -6344,36 +6144,26 @@ object SparkEntry {
     // tombstoned fingerprint may serve
     "q247_takedown_media_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id").cast(LongType).as("doc_id"))
-      val tmp = java.nio.file.Files.createTempDirectory("q247").toString
-      val (srcDir, ckDir) = (s"$tmp/src", s"$tmp/ck")
-      try {
+      scratch("q247") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/idx")
         def fp(b: DataFrame): DataFrame = Multimodal.dhashImages(b)(s).toDF()
           .filter(col("phash") =!= 0L && col("phash") =!= -1L)
-        val schema = plantedImageMedia(s, docs.limit(1)).schema
-        def ingestAvailable(): Unit = {
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-          IncrementalStream.packedDupIngest(stream, fp, "doc_id", "phash",
-            maxHamming = 3, store = store, checkpointDir = ckDir)
+        def ingest(rows: DataFrame): Unit =
+          IncrementalStream.packedDupIngest(fileStream(s, s"$tmp/src", rows), fp,
+            "doc_id", "phash", maxHamming = 3, store = store, checkpointDir = s"$tmp/ck")
             .awaitTermination()
-        }
         // filter BEFORE the encoder: the parity predicate cannot push
         // below the opaque mapPartitions, so filtering the doc list is
         // what keeps each round from encoding (and discarding) the
         // whole corpus
-        plantedImageMedia(s, docs.filter(col("doc_id") % 2 === 0))
-          .repartition(1).write.parquet(srcDir)
-        ingestAvailable()
+        ingest(plantedImageMedia(s, docs.filter(col("doc_id") % 2 === 0)).repartition(1))
         // ODD boundary: pair (400, 401) STRADDLES the tombstone cut, so
         // single-side gating (either direction) would serve it — the
         // either-side rule is graded, not just unit-pinned
         val added = graft.sync.Takedown.tombstone(store,
           docs.filter(col("doc_id") >= 401).select(col("doc_id")))
         require(added > 0L, "q247: the tombstone must actually record ids")
-        plantedImageMedia(s, docs.filter(col("doc_id") % 2 === 1))
-          .repartition(1).write.mode("append").parquet(srcDir)
-        ingestAvailable()
+        ingest(plantedImageMedia(s, docs.filter(col("doc_id") % 2 === 1)).repartition(1))
         val served = graft.sync.Takedown.withoutTombstonesAny(
             store.read("dup_pairs").get.select(col("id_a"), col("id_b")),
             Seq("id_a", "id_b"), store)
@@ -6389,7 +6179,7 @@ object SparkEntry {
             store.read("fingerprints").get.select(col("doc_id")), "doc_id", store)
           .filter(col("doc_id") >= 401).count()
         s.range(1).select(lit(pairV + sigV).as("violations"))
-      } finally deleteRecursively(tmp)
+      }
     }),
 
     // q248: HISTORY retention pruning — the governance pass a long-lived
@@ -6455,8 +6245,7 @@ object SparkEntry {
         .unionByName(stamp(dels(s1, s2), 2L, "d"))
       val log2 = stamp(ups(s3, s2), 3L, "u")
         .unionByName(stamp(dels(s2, s3), 3L, "d"))
-      val tmp = java.nio.file.Files.createTempDirectory("q249").toString
-      try {
+      scratch("q249") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         def ingest(log: DataFrame): Unit = {
           log.repartition(1).write.mode("append").parquet(s"$tmp/dsrc")
@@ -6475,9 +6264,7 @@ object SparkEntry {
         val facts = t(s, dir, "lineitem")
           .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"),
             (col("l_linenumber") % 3 + 1).cast(LongType).as("ver"))
-        facts.repartition(2).write.parquet(s"$tmp/fsrc")
-        val stream = s.readStream.schema(facts.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/fsrc/*.parquet")
+        val stream = fileStream(s, s"$tmp/fsrc", facts.repartition(2))
         val enriched = graft.sync.History.pitJoin(stream, h, Seq("o_orderkey"), "ver")
           .select(col("o_orderkey"), col("l_linenumber"), col("ver"),
             coalesce(col("o_custkey").cast(LongType), lit(-1L)).as("custkey_at"),
@@ -6492,8 +6279,8 @@ object SparkEntry {
           .trigger(Trigger.AvailableNow()).start()
           .awaitTermination()
         s.read.parquet(s"$tmp/served")
-          .orderBy("o_orderkey", "l_linenumber").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("o_orderkey", "l_linenumber")
+      }
     }),
 
     // q250: crawl-to-corpus curation END-TO-END — the verdict-mandated
@@ -6661,19 +6448,15 @@ object SparkEntry {
         .unionByName(emb.filter(col("vec_id") >= 50 && col("vec_id") < 75)
           .select((col("vec_id") + 2000000L).as("vec_id"),
             transform(col("embedding"), x => -x).as("embedding")))
-      val tmp = java.nio.file.Files.createTempDirectory("q254").toString
-      val (srcDir, ckDir, outDir) = (s"$tmp/src", s"$tmp/ck", s"$tmp/out")
-      try {
-        corpus.repartition(2).write.parquet(srcDir)
-        val stream = s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*.parquet")
-        val store = new graft.sync.ParquetStore(s, outDir)
+      scratch("q254") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", corpus.repartition(2))
+        val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.embedContaminationGate(stream, benchmark,
           "vec_id", "embedding", threshold = 0.95, store, "flags",
-          checkpointDir = ckDir).awaitTermination()
+          checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("flags").get.select(col("vec_id"))
-          .orderBy("vec_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("vec_id")
+      }
     }),
 
     // q255: embedding-cluster-balanced curation — the SemDeDup-adjacent
@@ -6764,11 +6547,8 @@ object SparkEntry {
       val urls = t(s, dir, "documents").select(col("doc_id"),
         concat(lit("http://h"), (col("doc_id") % 7).cast(StringType),
           lit(".example.com"), robotsPlantedPath).as("url"))
-      val tmp = java.nio.file.Files.createTempDirectory("q259").toString
-      try {
-        urls.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(urls.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+      scratch("q259") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", urls.repartition(2))
         // politeness first: host/path derived from the raw URL, the
         // broadcast rules decide, only survivors reach the frontier
         val polite = graft.operators.Robots.filterAllowed(
@@ -6782,8 +6562,8 @@ object SparkEntry {
           checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("seen").get
           .select(col("doc_id"), col("url_norm"), col("host"))
-          .orderBy("doc_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("doc_id")
+      }
     }),
 
     // q260: the HTTP message envelope inside WARC response records —
@@ -6955,11 +6735,8 @@ object SparkEntry {
       implicit val sp: SparkSession = s
       val docs = t(s, dir, "documents")
       val files = warcCurationFiles(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("q263").toString
-      try {
-        files.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(files.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+      scratch("q263") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", files.repartition(2))
         val store = new graft.sync.ParquetStore(s, s"$tmp/out")
         IncrementalStream.warcIngest(stream, store, "corpus",
           checkpointDir = s"$tmp/ck", status = Some(200),
@@ -6976,8 +6753,8 @@ object SparkEntry {
             count(when(col("n_tokens") >= 25, 1)).as("n_kept"),
             coalesce(sum(when(col("n_tokens") >= 25, col("n_tokens"))), lit(0L))
               .as("kept_tokens"))
-          .orderBy("source").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("source")
+      }
     }),
 
     // q264: WET/WARC EXPORT round trip — the sink half that closes the
@@ -7154,20 +6931,17 @@ object SparkEntry {
     // (|prompts| rows), never the rollouts
     "q274_stream_preference_pairs" -> ((s, dir) => {
       val rollouts = preferencePlantedRollouts(t(s, dir, "documents"))
-      val tmp = java.nio.file.Files.createTempDirectory("q274").toString
-      try {
+      scratch("q274") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
-        rollouts.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(rollouts.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", rollouts.repartition(2))
         IncrementalStream.preferenceIngest(stream, "prompt_id",
           "completion_id", "completion", "score",
           store, "prefs", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         graft.operators.Preference.pairsFromCandidates(
             store.read("prefs").get, "prompt_id", minMargin = 4.0)
-          .orderBy("prompt_id").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("prompt_id")
+      }
     }),
 
     // q275: GRPO-style group-relative advantages over the SAME planted
@@ -7243,12 +7017,9 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
         .select(col("doc_id").cast(LongType).as("doc_id"),
           sitemapPlantedXml.as("xml"))
-      val tmp = java.nio.file.Files.createTempDirectory("q276").toString
-      try {
+      scratch("q276") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/seen")
-        docs.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+        val stream = fileStream(s, s"$tmp/src", docs.repartition(2))
         val urls = stream
           .select(col("doc_id"),
             explode(graft.text.Sitemap.entries(col("xml"))).as("e"))
@@ -7258,8 +7029,8 @@ object SparkEntry {
           store, "seen", checkpointDir = s"$tmp/ck")
           .awaitTermination()
         store.read("seen").get.select(col("url_norm"), col("host"))
-          .orderBy("url_norm").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("url_norm")
+      }
     }),
 
     // q272: conversation lint — the QA gate synthetic/vendor SFT data
@@ -7355,11 +7126,8 @@ object SparkEntry {
                  else m.reduce(_ ++ _))
           }
         }.toDF("file_id", "content")
-      val tmp = java.nio.file.Files.createTempDirectory("q267").toString
-      try {
-        files.repartition(2).write.parquet(s"$tmp/src")
-        val stream = s.readStream.schema(files.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*.parquet")
+      scratch("q267") { tmp =>
+        val stream = fileStream(s, s"$tmp/src", files.repartition(2))
         // the admission chain, all stateless per row until the frontier
         val fetched = graft.sources.Warc.responseText(stream)
           .filter(col("http_status") === 200 && col("content_type") === "text/html")
@@ -7384,8 +7152,8 @@ object SparkEntry {
         IncrementalStream.frontierGate(polite, "link_id", "dst", store, "seen",
           checkpointDir = s"$tmp/ck").awaitTermination()
         store.read("seen").get.select(col("url_norm"), col("host"))
-          .orderBy("url_norm").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("url_norm")
+      }
     }),
 
     // q256: FULL-HISTORY hard erasure — takedown in the temporal family,
@@ -7425,8 +7193,7 @@ object SparkEntry {
         .unionByName(stamp(dels(s1, s2), 2L, "d"))
       val log2 = stamp(ups(s3, s2), 3L, "u")
         .unionByName(stamp(dels(s2, s3), 3L, "d"))
-      val tmp = java.nio.file.Files.createTempDirectory("q256").toString
-      try {
+      scratch("q256") { tmp =>
         val store = new graft.sync.ParquetStore(s, s"$tmp/state")
         def ingest(log: DataFrame): Unit = {
           log.repartition(1).write.mode("append").parquet(s"$tmp/src")
@@ -7486,8 +7253,8 @@ object SparkEntry {
         graft.Checkpoints.release(pre)
         post.select(col("o_orderkey"), col("o_custkey"), col("cents"),
             col("valid_from"), coalesce(col("valid_to"), lit(0L)).as("valid_to"))
-          .orderBy("o_orderkey", "valid_from").localCheckpoint()
-      } finally deleteRecursively(tmp)
+          .orderBy("o_orderkey", "valid_from")
+      }
     })
   )
 

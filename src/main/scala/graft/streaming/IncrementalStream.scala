@@ -108,20 +108,16 @@ object IncrementalStream {
                  pks: Seq[String], orderCols: Seq[String], checkpointDir: String,
                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.operators.Merge
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // upsertIfNewer's window already reduces intra-batch duplicates by
-        // the same (orderCols, row-hash) precedence, so every batch pays
-        // ONE keyed shuffle of dest ∪ batch; the first batch (no
-        // destination yet) merges into an empty frame rather than
-        // re-implementing the reduction inline — a drifted tie-break there
-        // would make the converged table depend on batch-0 arrival
-        val dest = store.read(table).getOrElse(batch.limit(0))
-        store.write(Merge.upsertIfNewer(dest, batch, pks, orderCols), table)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(stream, checkpointDir, trigger) { (batch, _, _) =>
+      // upsertIfNewer's window already reduces intra-batch duplicates by
+      // the same (orderCols, row-hash) precedence, so every batch pays
+      // ONE keyed shuffle of dest ∪ batch; the first batch (no
+      // destination yet) merges into an empty frame rather than
+      // re-implementing the reduction inline — a drifted tie-break there
+      // would make the converged table depend on batch-0 arrival
+      val dest = store.read(table).getOrElse(batch.limit(0))
+      store.write(Merge.upsertIfNewer(dest, batch, pks, orderCols), table)
+    }
   }
 
   /** CONTINUOUS SCD2 history maintenance — [[upsertSync]]'s temporal
@@ -278,6 +274,21 @@ object IncrementalStream {
         .map(_.group(1))
         .getOrElse(sys.error(s"no query id in streaming metadata at $p"))
     } finally in.close()
+  }
+
+  /** Start `stream` with checkpoint `checkpointDir` under `trigger`,
+    * handing `perBatch` each micro-batch, its batch id and the query's
+    * [[lineageId]]. The lineage is resolved on first call (the metadata
+    * file exists from query start), so it is read at most once per query
+    * and never by a `perBatch` that does not call it. */
+  private def startBatches(stream: DataFrame, checkpointDir: String, trigger: Trigger)
+                          (perBatch: (DataFrame, Long, () => String) => Unit): StreamingQuery = {
+    lazy val run = lineageId(stream.sparkSession, checkpointDir)
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) => perBatch(batch, batchId, () => run) }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .start()
   }
 
   /** CONTINUOUS retrieval serving: each arriving micro-batch of query
@@ -564,21 +575,16 @@ object IncrementalStream {
                        checkpointDir: String,
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(checks.nonEmpty, "expectationsGate: no checks given")
-    lazy val run = lineageId(docStream.sparkSession, checkpointDir)
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty micro-batch (trigger edge cases) must not log phantom
-        // all-pass rows — report only batches that carried data
-        val report = graft.operators.Expectations.rowChecks(batch, checks)
-          .filter(org.apache.spark.sql.functions.col("n_rows") > 0)
-          .withColumn("__obs",
-            org.apache.spark.sql.functions.lit(s"$run:$batchId"))
-        guardedAppendBatch(store, table, Seq("check_name", "__obs"),
-          run, batchId)(report)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(docStream, checkpointDir, trigger) { (batch, batchId, run) =>
+      // an empty micro-batch (trigger edge cases) must not log phantom
+      // all-pass rows — report only batches that carried data
+      val report = graft.operators.Expectations.rowChecks(batch, checks)
+        .filter(org.apache.spark.sql.functions.col("n_rows") > 0)
+        .withColumn("__obs",
+          org.apache.spark.sql.functions.lit(s"${run()}:$batchId"))
+      guardedAppendBatch(store, table, Seq("check_name", "__obs"),
+        run(), batchId)(report)
+    }
   }
 
   /** STREAMING Gopher quality gate — the heuristic filter battery
@@ -848,16 +854,9 @@ object IncrementalStream {
                             table: String, checkpointDir: String,
                             keyCols: Seq[String], trigger: Trigger)
                            (perBatch: DataFrame => DataFrame): StreamingQuery = {
-    // resolved once, on the first batch (the metadata file exists from
-    // query start); identical for every restart from this checkpoint
-    lazy val run = lineageId(stream.sparkSession, checkpointDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        guardedAppendBatch(store, table, keyCols, run, batchId)(perBatch(batch))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(stream, checkpointDir, trigger) { (batch, batchId, run) =>
+      guardedAppendBatch(store, table, keyCols, run(), batchId)(perBatch(batch))
+    }
   }
 
   /** One guarded append — the per-(table, batch) unit of [[guardedAppend]],
@@ -954,74 +953,70 @@ object IncrementalStream {
       "frontierGate: idCol may not be named url_norm/host (the seen-set output columns)")
     maxPerHost.foreach(k => require(k >= 1,
       s"frontierGate: maxPerHost must be >= 1, got $k"))
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // NULL ids filtered like NULL canonicals: min over an all-NULL id
-        // group would otherwise append a NULL-id seen-set row (the
-        // shardedShuffle null-id discipline); the in-batch winner rule is
-        // Dedup.exact's — smallest id per distinct key, one place only
-        val winners = graft.dedup.Dedup.exact(
-          batch
-            .select(col(idCol),
-              graft.functions.UrlNormalize(col(urlCol)).as("url_norm"))
-            .filter(col("url_norm").isNotNull && col(idCol).isNotNull),
-          keyCol = "url_norm", idCol = idCol)
-          .withColumn("host",
-            graft.functions.UrlNormalize.hostOfCanonical(col("url_norm")))
-        val prev = store.read(table)
-        val freshRaw = prev match {
-          case Some(p) =>
-            winners.join(p.select(col("url_norm")), Seq("url_norm"), "left_anti")
-          case None => winners
-        }
-        maxPerHost match {
-          case None => store.append(
-            freshRaw.select(col(idCol), col("url_norm"), col("host")), table)
-          case Some(k) =>
-            // pin: the ranked join AND the prior's broadcast host set
-            // both consume `fresh` — without the checkpoint the whole
-            // canonicalize + seen-set anti-join pipeline runs twice per
-            // batch (the Takedown.tombstone precedent)
-            val fresh = freshRaw.localCheckpoint()
-            try {
-              // deterministic admission: ids are not required unique per
-              // row, so a duplicate id within a host would make which
-              // URLs win the budget replay-dependent — url_norm (unique
-              // per row here by the Dedup.exact winner step) breaks the
-              // tie the same way on every replay
-              val rk = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("host")).orderBy(col(idCol), col("url_norm"))
-              val prior = prev match {
-                case Some(p) =>
-                  // seen-set rows of the DELTA's hosts only: the budget
-                  // itself bounds them at k per host, so this aggregate
-                  // never scales with the accumulated frontier. Host is
-                  // RE-DERIVED from the canonical at read (deterministic,
-                  // codegen'd) rather than trusted from storage: a
-                  // pre-budget seen table has no host column, and a
-                  // mixed-file table could read it as NULL for old rows —
-                  // either would silently undercount the budget
-                  p.drop("host")
-                    .withColumn("host",
-                      graft.functions.UrlNormalize.hostOfCanonical(col("url_norm")))
-                    .join(broadcast(fresh.select(col("host")).distinct()),
-                      Seq("host"), "left_semi")
-                    .groupBy(col("host")).agg(count(lit(1)).as("__prior"))
-                case None =>
-                  fresh.select(col("host")).limit(0)
-                    .withColumn("__prior", lit(0L))
-              }
-              store.append(
-                fresh.withColumn("__rk", row_number().over(rk))
-                  .join(prior, Seq("host"), "left")
-                  .filter(col("__rk") <= lit(k) - coalesce(col("__prior"), lit(0L)))
-                  .select(col(idCol), col("url_norm"), col("host")), table)
-            } finally graft.Checkpoints.release(fresh)
-        }
+    startBatches(stream, checkpointDir, trigger) { (batch, _, _) =>
+      // NULL ids filtered like NULL canonicals: min over an all-NULL id
+      // group would otherwise append a NULL-id seen-set row (the
+      // shardedShuffle null-id discipline); the in-batch winner rule is
+      // Dedup.exact's — smallest id per distinct key, one place only
+      val winners = graft.dedup.Dedup.exact(
+        batch
+          .select(col(idCol),
+            graft.functions.UrlNormalize(col(urlCol)).as("url_norm"))
+          .filter(col("url_norm").isNotNull && col(idCol).isNotNull),
+        keyCol = "url_norm", idCol = idCol)
+        .withColumn("host",
+          graft.functions.UrlNormalize.hostOfCanonical(col("url_norm")))
+      val prev = store.read(table)
+      val freshRaw = prev match {
+        case Some(p) =>
+          winners.join(p.select(col("url_norm")), Seq("url_norm"), "left_anti")
+        case None => winners
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      maxPerHost match {
+        case None => store.append(
+          freshRaw.select(col(idCol), col("url_norm"), col("host")), table)
+        case Some(k) =>
+          // pin: the ranked join AND the prior's broadcast host set
+          // both consume `fresh` — without the checkpoint the whole
+          // canonicalize + seen-set anti-join pipeline runs twice per
+          // batch (the Takedown.tombstone precedent)
+          val fresh = freshRaw.localCheckpoint()
+          try {
+            // deterministic admission: ids are not required unique per
+            // row, so a duplicate id within a host would make which
+            // URLs win the budget replay-dependent — url_norm (unique
+            // per row here by the Dedup.exact winner step) breaks the
+            // tie the same way on every replay
+            val rk = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("host")).orderBy(col(idCol), col("url_norm"))
+            val prior = prev match {
+              case Some(p) =>
+                // seen-set rows of the DELTA's hosts only: the budget
+                // itself bounds them at k per host, so this aggregate
+                // never scales with the accumulated frontier. Host is
+                // RE-DERIVED from the canonical at read (deterministic,
+                // codegen'd) rather than trusted from storage: a
+                // pre-budget seen table has no host column, and a
+                // mixed-file table could read it as NULL for old rows —
+                // either would silently undercount the budget
+                p.drop("host")
+                  .withColumn("host",
+                    graft.functions.UrlNormalize.hostOfCanonical(col("url_norm")))
+                  .join(broadcast(fresh.select(col("host")).distinct()),
+                    Seq("host"), "left_semi")
+                  .groupBy(col("host")).agg(count(lit(1)).as("__prior"))
+              case None =>
+                fresh.select(col("host")).limit(0)
+                  .withColumn("__prior", lit(0L))
+            }
+            store.append(
+              fresh.withColumn("__rk", row_number().over(rk))
+                .join(prior, Seq("host"), "left")
+                .filter(col("__rk") <= lit(k) - coalesce(col("__prior"), lit(0L)))
+                .select(col(idCol), col("url_norm"), col("host")), table)
+          } finally graft.Checkpoints.release(fresh)
+      }
+    }
   }
 
   def dedupIndexIngest(docStream: DataFrame, idCol: String, textCol: String,
@@ -1031,21 +1026,16 @@ object IncrementalStream {
                        bandTable: String = "band_index",
                        setTable: String = "shingle_sets",
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    lazy val run = lineageId(docStream.sparkSession, checkpointDir)
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val idx = graft.dedup.Dedup.buildNearDupIndex(
-          batch, idCol, textCol, hashedShingler, numHashes, bands)
-        // one row per (doc, band) / one row per doc — per-doc
-        // deterministic, so key-level anti-joins are exact retry guards
-        guardedAppendBatch(store, bandTable, Seq("id_b", "band"), run, batchId)(
-          idx.bandIndex)
-        guardedAppendBatch(store, setTable, Seq("id_b"), run, batchId)(
-          idx.shingleSets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(docStream, checkpointDir, trigger) { (batch, batchId, run) =>
+      val idx = graft.dedup.Dedup.buildNearDupIndex(
+        batch, idCol, textCol, hashedShingler, numHashes, bands)
+      // one row per (doc, band) / one row per doc — per-doc
+      // deterministic, so key-level anti-joins are exact retry guards
+      guardedAppendBatch(store, bandTable, Seq("id_b", "band"), run(), batchId)(
+        idx.bandIndex)
+      guardedAppendBatch(store, setTable, Seq("id_b"), run(), batchId)(
+        idx.shingleSets)
+    }
   }
 
   /** CONTINUOUS packed-fingerprint dedup ingest — the image/audio member
@@ -1092,43 +1082,38 @@ object IncrementalStream {
                       sigTable: String = "fingerprints",
                       pairTable: String = "dup_pairs",
                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    lazy val run = lineageId(mediaStream.sparkSession, checkpointDir)
-    mediaStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // fingerprint ONCE, pin: three consumers below (cross probe,
-        // intra probe, index append) must see one materialization — a
-        // lazy plan would decode the batch's media three times
-        val sigs = fingerprinter(batch)
-          .select(col(idCol), col(sigCol)).localCheckpoint()
-        try {
-          val cross = store.read(sigTable) match {
-            case Some(idx) =>
-              // id_b anti-joins the batch's OWN ids: on a replay after a
-              // crash between the sig append and the checkpoint commit,
-              // the accumulated index already contains this batch — the
-              // cross probe would re-find every intra pair in BOTH
-              // directions, and the (id_a, id_b)-keyed guard only blocks
-              // the direction the first attempt appended
-              val own = sigs.select(col(idCol).as("id_b"))
-              graft.dedup.Dedup.packedDupsAgainst(
-                  sigs, idx, idCol, sigCol, maxHamming)
-                .join(broadcast(own), Seq("id_b"), "left_anti")
-            case None =>
-              sigs.select(col(idCol).as("id_a"), col(idCol).as("id_b")).limit(0)
-          }
-          val intra = graft.dedup.Dedup.packedNearDups(
-            sigs, idCol, sigCol, maxHamming)
-          guardedAppendBatch(store, pairTable, Seq("id_a", "id_b"), run, batchId)(
-            cross.unionByName(intra)
-              .select(least(col("id_a"), col("id_b")).as("id_a"),
-                greatest(col("id_a"), col("id_b")).as("id_b"))
-              .distinct())
-          guardedAppendBatch(store, sigTable, Seq(idCol), run, batchId)(sigs)
-        } finally graft.Checkpoints.release(sigs)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(mediaStream, checkpointDir, trigger) { (batch, batchId, run) =>
+      // fingerprint ONCE, pin: three consumers below (cross probe,
+      // intra probe, index append) must see one materialization — a
+      // lazy plan would decode the batch's media three times
+      val sigs = fingerprinter(batch)
+        .select(col(idCol), col(sigCol)).localCheckpoint()
+      try {
+        val cross = store.read(sigTable) match {
+          case Some(idx) =>
+            // id_b anti-joins the batch's OWN ids: on a replay after a
+            // crash between the sig append and the checkpoint commit,
+            // the accumulated index already contains this batch — the
+            // cross probe would re-find every intra pair in BOTH
+            // directions, and the (id_a, id_b)-keyed guard only blocks
+            // the direction the first attempt appended
+            val own = sigs.select(col(idCol).as("id_b"))
+            graft.dedup.Dedup.packedDupsAgainst(
+                sigs, idx, idCol, sigCol, maxHamming)
+              .join(broadcast(own), Seq("id_b"), "left_anti")
+          case None =>
+            sigs.select(col(idCol).as("id_a"), col(idCol).as("id_b")).limit(0)
+        }
+        val intra = graft.dedup.Dedup.packedNearDups(
+          sigs, idCol, sigCol, maxHamming)
+        guardedAppendBatch(store, pairTable, Seq("id_a", "id_b"), run(), batchId)(
+          cross.unionByName(intra)
+            .select(least(col("id_a"), col("id_b")).as("id_a"),
+              greatest(col("id_a"), col("id_b")).as("id_b"))
+            .distinct())
+        guardedAppendBatch(store, sigTable, Seq(idCol), run(), batchId)(sigs)
+      } finally graft.Checkpoints.release(sigs)
+    }
   }
 
   /** STREAMING BPE encode gate — the FOURTH tokenizer family's deployment
@@ -1525,45 +1510,40 @@ object IncrementalStream {
                              checkpointDir: String,
                              trigger: Trigger,
                              seed: DataFrame => DataFrame = identity): StreamingQuery = {
-    lazy val run = lineageId(stream.sparkSession, checkpointDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = partialOf(batch)
-        def stamp(df: DataFrame): DataFrame =
-          df.withColumn("__last_batch", lit(batchId)).withColumn("__run", lit(run))
-        store.read(table) match {
-          case Some(prev) =>
-            // max over an empty state (an all-empty first batch) is NULL:
-            // treat as "nothing applied" rather than NPE. A pre-__run
-            // state table reads as unknown lineage (null) and is adopted.
-            val hasRun = prev.columns.contains("__run")
-            val r =
-              if (hasRun) prev.agg(max(col("__last_batch")), max(col("__run"))).head
-              else prev.agg(max(col("__last_batch"))).head
-            val last = if (r.isNullAt(0)) -1L else r.getLong(0)
-            val prevRun = if (hasRun && !r.isNullAt(1)) r.getString(1) else null
-            if (prevRun != null && prevRun != run)
-              sys.error(s"maintained view: state table '$table' belongs to streaming " +
-                s"lineage $prevRun (last batch $last) but this query is lineage $run " +
-                "— a fresh checkpoint restarts batch ids at 0, so continuing would " +
-                "silently skip every re-read batch. State and checkpoint pair for " +
-                "life: resume with the original checkpoint directory, or point this " +
-                "query at a fresh state table to rebuild from scratch.")
-            if (last < batchId)
-              store.writeAtomic(
-                stamp(merge(prev.drop("__last_batch", "__run"), partial)),
-                table)
-            // else: replayed batch, already folded into the state — skip
-          case None =>
-            // `seed` turns the first partial into state shape when the two
-            // differ (identity for the count/stat family, whose partials
-            // ARE state rows; the SCD2 fold seeds an empty history)
-            store.writeAtomic(stamp(seed(partial)), table)
-        }
+    startBatches(stream, checkpointDir, trigger) { (batch, batchId, run) =>
+      val partial = partialOf(batch)
+      def stamp(df: DataFrame): DataFrame =
+        df.withColumn("__last_batch", lit(batchId)).withColumn("__run", lit(run()))
+      store.read(table) match {
+        case Some(prev) =>
+          // max over an empty state (an all-empty first batch) is NULL:
+          // treat as "nothing applied" rather than NPE. A pre-__run
+          // state table reads as unknown lineage (null) and is adopted.
+          val hasRun = prev.columns.contains("__run")
+          val r =
+            if (hasRun) prev.agg(max(col("__last_batch")), max(col("__run"))).head
+            else prev.agg(max(col("__last_batch"))).head
+          val last = if (r.isNullAt(0)) -1L else r.getLong(0)
+          val prevRun = if (hasRun && !r.isNullAt(1)) r.getString(1) else null
+          if (prevRun != null && prevRun != run())
+            sys.error(s"maintained view: state table '$table' belongs to streaming " +
+              s"lineage $prevRun (last batch $last) but this query is lineage ${run()} " +
+              "— a fresh checkpoint restarts batch ids at 0, so continuing would " +
+              "silently skip every re-read batch. State and checkpoint pair for " +
+              "life: resume with the original checkpoint directory, or point this " +
+              "query at a fresh state table to rebuild from scratch.")
+          if (last < batchId)
+            store.writeAtomic(
+              stamp(merge(prev.drop("__last_batch", "__run"), partial)),
+              table)
+          // else: replayed batch, already folded into the state — skip
+        case None =>
+          // `seed` turns the first partial into state shape when the two
+          // differ (identity for the count/stat family, whose partials
+          // ARE state rows; the SCD2 fold seeds an empty history)
+          store.writeAtomic(stamp(seed(partial)), table)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
   }
 
   // ------------------------------------------- custom state (O11 streaming)

@@ -25,18 +25,7 @@ class DeterminismBoundarySpec extends AnyFunSuite {
     Seq("ivfCentroids(", "ivfIndex(", "pqTrain(")
 
   test("no query lambda fans out a scan AND trains float centroids") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // split the declared-query map into per-lambda chunks at the
-    // "qNNN_name" -> boundaries (comments between entries ride along
-    // with the FOLLOWING lambda, which is the conservative side)
-    val entry = """"(q\d+_\w+)" ->""".r
-    val starts = entry.findAllMatchIn(src).map(m => (m.group(1), m.start)).toSeq
-    val chunks = starts.zipAll(starts.drop(1).map(_._2), ("", 0), src.length)
-      .collect { case ((name, from), to) if name.nonEmpty =>
-        name -> src.substring(from, to)
-      }
+    val chunks = DeterminismBoundarySpec.queryLambdas
     assert(chunks.nonEmpty, "no query entries found — did SparkEntry move?")
     val offenders = chunks.collect {
       case (name, body)
@@ -60,5 +49,24 @@ class DeterminismBoundarySpec extends AnyFunSuite {
         s"trainer ${t.stripSuffix("(")} not found in Similarity.scala — " +
           "update DeterminismBoundarySpec's list")
     }
+  }
+}
+
+object DeterminismBoundarySpec {
+
+  /** SparkEntry.scala split into per-lambda chunks at the
+    * "qNNN_name" -> boundaries (comments between entries ride along with
+    * the FOLLOWING lambda, which is the conservative side). The oracle map
+    * reuses the names, so a name may own two chunks. */
+  def queryLambdas: Seq[(String, String)] = {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val entry = """"(q\d+_\w+)" ->""".r
+    val starts = entry.findAllMatchIn(src).map(m => (m.group(1), m.start)).toSeq
+    starts.zipAll(starts.drop(1).map(_._2), ("", 0), src.length)
+      .collect { case ((name, from), to) if name.nonEmpty =>
+        name -> src.substring(from, to)
+      }
   }
 }
